@@ -60,16 +60,27 @@ object Normalize {
   private val EmailRe: Regex = "^[\\w.+-]+@[\\w.-]+\\.[a-zA-Z]{2,}$".r
   private val PhoneRe: Regex = "^\\+?[\\d\\s\\-()]+$".r
   private val IntRe: Regex = "^[+-]?\\d+$".r
+  // full-match (String.matches) patterns, compiled once per JVM
+  private val PyFloatBody = java.util.regex.Pattern.compile("(\\d+\\.?\\d*|\\.\\d+)([eE][+-]?\\d+)?")
+  private val DigitsOnly = java.util.regex.Pattern.compile("^\\d+$")
+  private val DecimalOnly = java.util.regex.Pattern.compile("^\\d*\\.\\d+$")
+  private val NegNumDate = java.util.regex.Pattern.compile("^" + Dates.NegNumDateRe + "$")
+  private val NonDigit = java.util.regex.Pattern.compile("[^\\d]")
 
   /** Faithful normalize of one cell. The reference stringifies EVERY non-null
     * value (`s = str(val)`, backend/etl_pipeline.py:170) — so int 1 → "1" →
     * boolean True, int 95 → "95" → phone branch → digit STRING "95", bool
     * True → "True" → True again. Only None/NaN short-circuit.
     */
-  def normalizeCell(v: JVal): JVal = v match {
+  def normalizeCell(v: JVal): JVal = normalizeCell(v, PyRender.pyStr(v))
+
+  /** [[normalizeCell]] for a caller that already holds the cell's python
+    * `str()` rendering `s` (evaluated only for non-NA cells).
+    */
+  def normalizeCell(v: JVal, s: => String): JVal = v match {
     case JNull => JNull
     case JFloat(d) if d.isNaN => JNull
-    case other => normalizeString(PyRender.pyStr(other))
+    case _ => normalizeString(s)
   }
 
   /** The branch chain over an input string. */
@@ -84,7 +95,7 @@ object Normalize {
         case Some(m) => JFloat(m.group(1).toDouble / 100.0)
         case None =>
           if (EmailRe.findFirstIn(s).isDefined) JStr(sl)
-          else if (PhoneRe.findFirstIn(s).isDefined) JStr(s.replaceAll("[^\\d]", ""))
+          else if (PhoneRe.findFirstIn(s).isDefined) JStr(NonDigit.matcher(s).replaceAll(""))
           else {
             val sn = s.replace(",", "").replace("$", "").replace("₹", "").strip()
             if (IntRe.findFirstIn(sn).isDefined)
@@ -130,7 +141,7 @@ object Normalize {
                   case Some(iso) => JStr(iso)
                   case None =>
                     if (PhoneRe.findFirstIn(s).isDefined && s.exists(c => !c.isDigit))
-                      JStr(s.replaceAll("[^\\d]", ""))
+                      JStr(NonDigit.matcher(s).replaceAll(""))
                     else JStr(sl)
                 }
             }
@@ -146,14 +157,14 @@ object Normalize {
   }
 
   /** python `float(s)` acceptance (sign, decimals, exponents, inf/infinity). */
-  private[etl] def pyFloat(s0: String): Option[Double] = {
+  private[graft] def pyFloat(s0: String): Option[Double] = {
     val s = s0.strip().toLowerCase(Locale.ROOT)
     val body = s.stripPrefix("+").stripPrefix("-")
     val neg = s.startsWith("-")
     if (body == "inf" || body == "infinity")
       Some(if (neg) Double.NegativeInfinity else Double.PositiveInfinity)
     else if (body == "nan") Some(Double.NaN)
-    else if (body.matches("(\\d+\\.?\\d*|\\.\\d+)([eE][+-]?\\d+)?"))
+    else if (PyFloatBody.matcher(body).matches())
       try Some(s.toDouble) catch { case _: NumberFormatException => None }
     else None
   }
@@ -167,15 +178,15 @@ object Normalize {
     case other =>
       val s = PyRender.pyStr(other).strip()
       if (s.isEmpty) "null"
-      else if (s.matches("^\\d+$")) "integer"
-      else if (s.matches("^\\d*\\.\\d+$")) "float"
+      else if (DigitsOnly.matcher(s).matches()) "integer"
+      else if (DecimalOnly.matcher(s).matches()) "float"
       else if (s.equalsIgnoreCase("true") || s.equalsIgnoreCase("false")) "boolean"
       // dateutil quirk: negative numbers reach dateparse (the int/float
       // regexes above don't match '-') and often PARSE — see
       // [[Dates.NegNumDateRe]]. Mirrored so the schema vote agrees with the
       // reference; normalize_value is unaffected (its int()/float() branches
       // consume negatives before its dateparse).
-      else if (s.matches("^" + Dates.NegNumDateRe + "$")) "date"
+      else if (NegNumDate.matcher(s).matches()) "date"
       else if (Dates.parses(s)) "date"
       // digit-comma-digit family (comma-joined flattened lists) — vote
       // only; see [[Dates.commaIntDateVote]]
@@ -552,7 +563,8 @@ object Dates {
     * `today` overload exists for the pinned-run-date golden spec.
     */
   def parseIso(s0: String): Option[String] =
-    parseIso(s0, java.time.LocalDate.now())
+    // the gate needs no date: strings it rejects skip the clock read
+    if (!gateOk(s0)) None else parseIso(s0, java.time.LocalDate.now())
 
   // ---- round-8 tail: dateutil tokenizer-jump preprocessing. Each rewrite
   // mirrors a measured _timelex/jump rule (all probed against live
@@ -580,11 +592,23 @@ object Dates {
   private val PreApoAD = java.util.regex.Pattern.compile("([A-Za-z])'+(\\d)")
   private val PreApoDA = java.util.regex.Pattern.compile("(\\d)'+([A-Za-z])")
 
+  // Each rewrite below runs only when its pattern CAN match (two spaces or
+  // a whitespace char other than ' ' — every `\s` is one; a '.' or ','; a
+  // leading weekday initial; an ASCII letter for an ordinal suffix): the
+  // common date shapes skip the matcher scans, with the same result.
   private def preprocess(s0: String): String = {
-    val s1 = PreSpaces.matcher(s0.strip()).replaceAll(" ")
-    val s2 = PreTrail.matcher(s1).replaceAll("")
-    val s3 = WeekdayPrefix.replaceFirstIn(s2, "")
-    val s4 = PreOrd.matcher(s3).replaceAll("$1")
+    val t = s0.strip()
+    val s1 =
+      if (t.contains("  ") || t.exists(c => c != ' ' && Character.isWhitespace(c)))
+        PreSpaces.matcher(t).replaceAll(" ")
+      else t
+    val s2 =
+      if (s1.indexOf('.') >= 0 || s1.indexOf(',') >= 0) PreTrail.matcher(s1).replaceAll("")
+      else s1
+    val s3 =
+      if (s2.nonEmpty && "mMtTwWfFsS".indexOf(s2.charAt(0)) >= 0) WeekdayPrefix.replaceFirstIn(s2, "")
+      else s2
+    val s4 = if (s3.exists(c => c < 128 && c.isLetter)) PreOrd.matcher(s3).replaceAll("$1") else s3
     // apostrophes are jump tokens in digit-adjacent positions ("Jan 5'24",
     // "'24 Jan 5", "05'01'24", "Jan'5'2024" all parse; after a '-' they do
     // NOT — "Jan-5-'24" fails, so the rewrites stay position-scoped):

@@ -10,10 +10,18 @@ import org.apache.spark.sql.functions._
   *     → extract (E1-E9 generator UDF + explode; per-doc, no shuffle)
   *     → pivot   (dynamic schema union: one tiny key-collect agg + a
   *                metadata-only wide projection — the json_normalize step)
-  *     → normalize (T5 two-pass: one wide aggregate decides each column's
-  *                branch; one projection applies it — no per-column jobs)
+  *     → normalize (T5 two-pass: one kernel projection — one JSON parse
+  *                and one normalize_value per cell — is cached; one wide
+  *                hash aggregate over it decides each column's branch; one
+  *                projection of the cache applies it — no per-column jobs)
   *     → profile  (Profile.generateSchema: single long-format shuffle)
   *     → registry diff + save, CSV/parquet sinks
+  *
+  * Caches: the extraction `recs` (read by the pivot key scan and the
+  * kernel projection) is released as soon as the branch decision has
+  * materialized the per-cell cache; the per-cell cache is released once
+  * the profile has materialized the normalized table (registry mode) or by
+  * graft.core.Caches.release at query end.
   *
   * The whole thing is lazy DataFrame DAG; only the pivot key-set and the
   * branch decisions hit the driver (both are schema-sized, not data-sized).
@@ -71,19 +79,23 @@ object DocumentEtl {
       now: Long = System.currentTimeMillis() / 1000,
       mode: Mode = Faithful): Result = {
 
-    // extraction is consumed by several downstream jobs (pivot key scan,
-    // branch-decision aggregate, the wide table itself) — persist it, and
+    // extraction is consumed by two downstream jobs (the pivot key scan,
+    // the per-cell kernel projection) — persist it, and
     // spread single-file inputs across cores first (CPU-bound UDF).
     val recs = extract(
       docs.transform(graft.core.Par.spread))
       .transform(graft.core.Caches.persistLevel(
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val (wide, cols) = pivot(spark, recs)
-    val norm0 =
+    val (norm0, cells) =
       if (mode == Sane)
-        wide.select(col("doc_id") +: col("row_idx") +:
-          cols.map(c => normalizeCellSane(col(s"`$c`")).as(c)): _*)
-      else normalizeData(spark, wide, cols)
+        (wide.select(col("doc_id") +: col("row_idx") +:
+          cols.map(c => normalizeCellSane(col(s"`$c`")).as(c)): _*), None)
+      else normalizeCached(wide, cols)
+    // faithful mode: the decision aggregate has materialized the per-cell
+    // cache and the table reads only that cache — `recs` has served its
+    // last consumer
+    if (cells.nonEmpty) recs.unpersist(blocking = false)
     val normalized = flattenLists(norm0, cols)
       .transform(graft.core.Caches.persistLevel(
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
@@ -92,10 +104,12 @@ object DocumentEtl {
         // registry mode is EAGER: the schema must be generated and saved
         // as a side effect of the run (and the diff reads the OLD entry
         // before the save). generateSchema's aggregates materialize
-        // `normalized` fully, so the extraction cache has served its last
-        // consumer — free it after.
+        // `normalized` fully, so the per-cell cache (and, in sane mode,
+        // the extraction cache) has served its last consumer — free it
+        // after.
         val schema = Profile.generateSchema(normalized, cols, now)
         recs.unpersist(blocking = false)
+        cells.foreach(_.unpersist(blocking = false))
         val reg = new SchemaRegistry(dir)
         val diff = reg.load(sourceId)
           .map(old => SchemaDiff.diff(old.toJson, schema.toJson))
@@ -105,12 +119,10 @@ object DocumentEtl {
         // no registry: defer the schema aggregates until a caller actually
         // reads `.schema` — consumers that only need the normalized table
         // (e.g. a downstream profile/stats job) skip a full profiling pass.
-        // Round 18: no eager normalized.count() either — the first consumer
-        // job materializes the cache, and `recs` stays registered in
-        // graft.core.Caches (persistLevel above), so the harness releases
-        // it at query end; the count existed only to free recs one job
-        // early, a whole extra pass over the cache for a few MB of
-        // early-released memory.
+        // No eager normalized.count() either — the first consumer job
+        // materializes the cache; the per-cell cache (and `recs` in sane
+        // mode) stay registered in graft.core.Caches (persistLevel), so
+        // the harness releases them at query end.
         Result(normalized, cols,
           () => Profile.generateSchema(normalized, cols, now), () => None)
     }
@@ -141,28 +153,12 @@ object DocumentEtl {
     * in the reference output, so it's semantics, not an artifact.
     */
   def pivot(spark: SparkSession, recs: DataFrame): (DataFrame, Seq[String]) = {
-    val total = recs.count()
-    val v = col("e.v")
-    val isNullLike = v === "null"
-    val isInt = v.rlike("^-?\\d+$")
-    val isFloat = v.rlike("^-?(\\d+\\.\\d*|\\.\\d+|\\d+(\\.\\d*)?[eE][+-]?\\d+)$") ||
-      v.isin("NaN", "Infinity", "-Infinity")
     // the key table is schema-sized — sort it on the DRIVER instead of
     // paying a single-partition sort exchange before the collect (round 18)
-    val keyStats = recs
-      .select(col("row_idx"), posexplode(col("entries")).as(Seq("pos", "e")))
-      .groupBy(col("e.k").as("k"))
-      .agg(
-        min(struct(col("row_idx"), col("pos"))).as("first_seen"),
-        count(lit(1)).as("cnt"),
-        sum(isNullLike.cast("long")).as("n_null"),
-        sum(isInt.cast("long")).as("n_int"),
-        sum(isFloat.cast("long")).as("n_float"))
-      .collect()
-      .sortBy { r =>
-        val fs = r.getStruct(r.fieldIndex("first_seen"))
-        (fs.getLong(0), fs.getInt(1))
-      }
+    val (counted, keyStats) = keyScan(recs).collect()
+      .sortBy(r => (r.getAs[Long]("first_row"), r.getAs[Int]("first_pos")))
+      .partition(_.isNullAt(0))
+    val total = counted.headOption.fold(0L)(_.getAs[Long]("cnt"))
 
     val keys = keyStats.map(_.getAs[String]("k")).toSeq
     val castFloat = keyStats.filter { r =>
@@ -184,53 +180,131 @@ object DocumentEtl {
     (wide, keys)
   }
 
+  /** The pivot's one key-scan aggregate: per key (first row, its position,
+    * count, null / int / float cell counts), plus one NULL-key row whose
+    * count is the record count.
+    */
+  private[graft] def keyScan(recs: DataFrame): DataFrame = {
+    val v = col("e.v")
+    val isNullLike = v === "null"
+    val isInt = v.rlike("^-?\\d+$")
+    val isFloat = v.rlike("^-?(\\d+\\.\\d*|\\.\\d+|\\d+(\\.\\d*)?[eE][+-]?\\d+)$") ||
+      v.isin("NaN", "Infinity", "-Infinity")
+    // every record gets one extra entry with a NULL key (object keys never
+    // are): that group's count is the record count, so the row count rides
+    // the key scan instead of a separate count() job over recs
+    val counter = struct(lit(null).cast("string").as("k"), lit(null).cast("string").as("v"))
+    recs
+      .select(col("row_idx"),
+        posexplode(concat(col("entries"), array(counter))).as(Seq("pos", "e")))
+      .groupBy(col("e.k").as("k"))
+      .agg(
+        // a key occurs at most once per record, so (min row_idx, its pos)
+        // is the old min(struct(row_idx, pos)) without a struct buffer —
+        // the aggregate stays a HashAggregate
+        min(col("row_idx")).as("first_row"),
+        min_by(col("pos"), col("row_idx")).as("first_pos"),
+        count(lit(1)).as("cnt"),
+        sum(isNullLike.cast("long")).as("n_null"),
+        sum(isInt.cast("long")).as("n_int"),
+        sum(isFloat.cast("long")).as("n_float"))
+  }
+
   /** T5 — per-column normalization dispatch (reference:
-    * backend/etl_pipeline.py:209-226). Two passes:
-    * pass 1: ONE wide aggregate computes, per column, the first non-NA
-    *   value (in row order) and whether all non-NA values look numeric;
-    * pass 2: ONE projection applies the chosen branch per column:
+    * backend/etl_pipeline.py:209-226). Two passes over ONE cached projection:
+    * pass 1: [[EtlCell]] parses each wide-table cell once and runs the
+    *   faithful normalize_value chain on it once; the projection of its
+    *   fields (raw cell, branch a/b output, branch c output, output tag,
+    *   NA / date-like / numeric / multi-list booleans — no `str(x)`
+    *   strings) is persisted through `Caches.persistLevel`, and ONE
+    *   hash-aggregatable decision aggregate over it (min_by, every, max,
+    *   sums — no struct buffers, so no SortAggregate) decides per column:
+    *   the first non-NA value (in row order) is date-like, all non-NA
+    *   values look numeric, any multi-element list, and the output tags;
+    * pass 2: ONE projection of the cache picks the chosen field per column:
     *   (a) date-like first value → faithful normalize_value chain,
     *   (b) all-numeric-ish      → faithful normalize_value chain,
-    *   (c) otherwise            → fillna('') + strip + lowercase.
+    *   (c) otherwise            → fillna('') + strip + lowercase;
+    *   plus the float coercion of (a)/(b) outputs. The returned table reads
+    *   only the cache, which the decision aggregate has materialized, so
+    *   the caller may release `wide`'s inputs as soon as this returns.
     */
-  def normalizeData(spark: SparkSession, wide: DataFrame, cols: Seq[String]): DataFrame = {
-    if (cols.isEmpty) return wide
-    val numRe = "^(\\$|₹)?\\d+(\\.\\d+)?%?$"
+  def normalizeData(spark: SparkSession, wide: DataFrame, cols: Seq[String]): DataFrame =
+    normalizeCached(wide, cols)._1
+
+  /** [[normalizeData]] plus the per-cell cache it reads (None when there
+    * are no columns and `wide` comes back as it is).
+    */
+  private def normalizeCached(wide: DataFrame, cols: Seq[String]): (DataFrame, Option[DataFrame]) = {
+    if (cols.isEmpty) return (wide, None)
     // NOTE on `is_numeric_dtype(x)` in the reference's gate
     // (backend/etl_pipeline.py:218): pandas 2.2's Series.map unboxes numpy
     // scalars to Python natives, and is_numeric_dtype(python int/float/bool)
     // is False — so the disjunct never fires on VALUES (verified against the
     // live reference: an int64 column holding -5 takes branch (c) and emits
     // "-5"). It only fires for STRING cells that happen to name a numpy
-    // dtype ("int64", "short", ...) — the NumpyDtypeNames clause below.
+    // dtype ("int64", "short", ...) — EtlCellKernel's dtype-name clause.
     // Negative-number and bool-column behavior is pinned by the fuzz corpus.
-    // Round 18 (guide §1.2 step 2 — per-task work): the JSON-parsing UDFs
-    // (pyStrCell parses+renders, normOutTag parses+runs the whole normalize
-    // chain) are evaluated ONCE per (row, column) in an explicit projection
-    // feeding the aggregate — the old aggregate expressions referenced `tag`
-    // in five sums and `s` twice, re-running the UDF per reference. Same
-    // values, same aggregates.
-    val projected0 = wide.select(col("row_idx") +:
-      cols.zipWithIndex.flatMap { case (c, i) =>
-        val cell = col(s"`$c`")
-        Seq(pyStrCell(cell).as(s"ps_$i"), normOutTag(cell).as(s"tag_$i"),
-          isNa(cell).as(s"na_$i"), isMultiList(cell).as(s"ml_$i"))
-      }: _*)
-    val aggExprs = cols.indices.flatMap { i =>
-      val s = col(s"ps_$i")
-      val tag = col(s"tag_$i")
-      val na = col(s"na_$i")
-      Seq(
-        min(when(na, null).otherwise(struct(col("row_idx").as("r"), s.as("v"))))
-          .getField("v").as(s"first_$i"),
-        every(when(na, null)
-          .otherwise(regexp_replace(s, ",", "").rlike(numRe) ||
-            s.isInCollection(Normalize.NumpyDtypeNames))).as(s"allnum_$i"),
+    val cells = cellKernel(wide, cols).transform(graft.core.Caches.persistLevel(
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val row = branchDecision(cells, cols.size).collect()(0)
+
+    val projected = cols.zipWithIndex.map { case (c, i) =>
+      def flag(name: String) =
+        Option(row.getAs[java.lang.Boolean](s"${name}_$i")).map(_.booleanValue)
+      def l(name: String) = row.getAs[Long](s"${name}_$i")
+      val coerceFloat =
+        l("n_b") == 0 && l("n_s") == 0 && l("n_i") > 0 && (l("n_f") > 0 || l("n_n") > 0)
+      val norm = col(s"norm_$i")
+      val normalized =
+        if (coerceFloat) when(norm.rlike("^-?\\d+$"), concat(norm, lit(".0"))).otherwise(norm)
+        else norm
+      flag("first") match {
+        // no non-null values (or an unparsable first one) → column untouched
+        case None => col(s"raw_$i").as(c)
+        case Some(true) => normalized.as(c)
+        case _ if flag("allnum").contains(true) => normalized.as(c)
         // pandas quirk: `pd.notna(list)` raises for lists of length ≥ 2 →
         // branch (c) throws → the whole column is SKIPPED raw (reference:
         // backend/etl_pipeline.py:222-224). Single-element lists stringify
         // normally; flatten later comma-joins the surviving lists.
-        max(col(s"ml_$i").cast("int")).as(s"haslist_$i"),
+        case _ if flag("haslist").contains(true) => col(s"raw_$i").as(c)
+        case _ => when(col(s"lower_is_norm_$i"), norm).otherwise(col(s"lower_$i")).as(c)
+      }
+    }
+    (cells.select(col("doc_id") +: col("row_idx") +: projected: _*), Some(cells))
+  }
+
+  /** Pass 1's projection: per column `raw_i` plus the [[EtlCell]] fields as
+    * flat columns `<field>_i`. The kernel struct is bound in its own
+    * projection and only then split: the struct is referenced once per
+    * field, so Catalyst keeps the two projections apart and evaluates the
+    * kernel once per cell.
+    */
+  private[graft] def cellKernel(wide: DataFrame, cols: Seq[String]): DataFrame =
+    wide.select(col("doc_id") +: col("row_idx") +:
+      cols.zipWithIndex.flatMap { case (c, i) =>
+        val cell = col(s"`$c`")
+        Seq(cell.as(s"raw_$i"), EtlCell(cell).as(s"k_$i"))
+      }: _*)
+      .select(col("doc_id") +: col("row_idx") +:
+        (0 until cols.size).flatMap { i =>
+          col(s"raw_$i") +: EtlCell.fields.map(f => col(s"k_$i.$f").as(s"${f}_$i"))
+        }: _*)
+
+  /** The one-row branch decision over [[cellKernel]]'s `n` columns. Every
+    * aggregate keeps a fixed-width buffer (min_by, every, max, sums), so it
+    * plans as a HashAggregate. row_idx is unique per record, so min_by's
+    * pick is the old min(struct(row_idx, value)) pick; NA rows carry a null
+    * ordering and are skipped.
+    */
+  private[graft] def branchDecision(cells: DataFrame, n: Int): DataFrame = {
+    val aggExprs = (0 until n).flatMap { i =>
+      val tag = col(s"tag_$i")
+      Seq(
+        min_by(col(s"date_like_$i"), when(!col(s"na_$i"), col("row_idx"))).as(s"first_$i"),
+        every(col(s"numeric_$i")).as(s"allnum_$i"),
+        max(col(s"multi_list_$i")).as(s"haslist_$i"),
         // post-normalize pandas dtype inference: the mapped column becomes
         // float64 when all outputs are int/float AND there is any float or
         // any None — ints then read back as floats ("99" → 99.0).
@@ -240,30 +314,7 @@ object DocumentEtl {
         sum((tag === "s").cast("long")).as(s"n_s_$i"),
         sum((tag === "n").cast("long")).as(s"n_n_$i"))
     }
-    val row = projected0.agg(aggExprs.head, aggExprs.tail: _*).collect()(0)
-
-    val projected = cols.zipWithIndex.map { case (c, i) =>
-      val cell = col(s"`$c`")
-      val first = Option(row.getAs[String](s"first_$i"))
-      val allNum = Option(row.getAs[java.lang.Boolean](s"allnum_$i")).exists(_.booleanValue)
-      val hasMultiList = Option(row.getAs[java.lang.Integer](s"haslist_$i")).exists(_ > 0)
-      def l(name: String) = row.getAs[Long](s"${name}_$i")
-      val coerceFloat =
-        l("n_b") == 0 && l("n_s") == 0 && l("n_i") > 0 && (l("n_f") > 0 || l("n_n") > 0)
-      def withCoerce(normalized: Column): Column =
-        if (coerceFloat)
-          when(normalized.rlike("^-?\\d+$"), concat(normalized, lit(".0"))).otherwise(normalized)
-        else normalized
-      first match {
-        case None => cell.as(c) // no non-null values → column untouched
-        case Some(f) if f.length > 8 && f.matches("^\\d{4}-\\d{2}-\\d{2}.*") =>
-          withCoerce(normalizeCell(cell)).as(c)
-        case _ if allNum => withCoerce(normalizeCell(cell)).as(c)
-        case _ if hasMultiList => cell.as(c) // exception path → column skipped
-        case _ => stripLowerCell(cell).as(c)
-      }
-    }
-    wide.select(col("doc_id") +: col("row_idx") +: projected: _*)
+    cells.agg(aggExprs.head, aggExprs.tail: _*)
   }
 
   /** T2/T3 — flatten: after normalization the only non-scalar cells left are

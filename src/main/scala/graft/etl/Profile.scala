@@ -209,22 +209,61 @@ object EngineSchema {
   * reference: backend/etl_pipeline.py:279-310. The reference's `source_id`
   * config bug (always "default_source") is deliberately NOT reproduced:
   * sourceId is an explicit parameter (SURVEY.md §1.3).
+  *
+  * Crash safety: a save writes and syncs a temp file in the registry
+  * directory, then renames it over the entry atomically — a save that
+  * dies part-way leaves the previous entry whole. A corrupt entry raises
+  * [[SchemaRegistry.CorruptEntry]] instead of reading as "no entry", which
+  * would silently turn the next run's drift diff into "first run".
   */
 final class SchemaRegistry(dir: String) {
-  private def path(sourceId: String) = java.nio.file.Paths.get(dir, s"${sourceId}_schema.json")
+  import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
 
+  private def path(sourceId: String) = Paths.get(dir, s"${sourceId}_schema.json")
+
+  /** the saved entry; None when there is none */
   def load(sourceId: String): Option[EngineSchema] = {
     val p = path(sourceId)
-    if (!java.nio.file.Files.exists(p)) None
-    else
-      try EngineSchema.fromJson(Json.parse(java.nio.file.Files.readString(p)))
-      catch { case _: Exception => None }
+    if (!Files.exists(p)) None
+    else {
+      // I/O errors propagate as they are; only bad CONTENT is corruption
+      val parsed =
+        try Json.parse(Files.readString(p))
+        catch {
+          case e: java.nio.charset.CharacterCodingException => throw new SchemaRegistry.CorruptEntry(p, e)
+          case e: com.fasterxml.jackson.core.JacksonException => throw new SchemaRegistry.CorruptEntry(p, e)
+        }
+      EngineSchema.fromJson(parsed) match {
+        case Some(s) => Some(s)
+        case None => throw new SchemaRegistry.CorruptEntry(p, null)
+      }
+    }
   }
 
   def save(sourceId: String, schema: EngineSchema): Unit = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    java.nio.file.Files.writeString(path(sourceId), schema.render)
+    val d = Paths.get(dir)
+    Files.createDirectories(d)
+    // a unique name per save (concurrent savers never share a temp file),
+    // created with the default permissions the entry itself would get
+    val tmp = d.resolve(s".${sourceId}_schema.json.${java.util.UUID.randomUUID()}.tmp")
+    try {
+      val ch = java.nio.channels.FileChannel.open(tmp,
+        StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
+      try {
+        val buf = java.nio.ByteBuffer.wrap(schema.render.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        while (buf.hasRemaining) ch.write(buf)
+        ch.force(true)
+      } finally ch.close()
+      Files.move(tmp, path(sourceId), StandardCopyOption.ATOMIC_MOVE,
+        StandardCopyOption.REPLACE_EXISTING)
+    } finally Files.deleteIfExists(tmp)
   }
+}
+
+object SchemaRegistry {
+  /** a registry entry that is not a schema document */
+  final class CorruptEntry(val file: java.nio.file.Path, cause: Throwable)
+      extends java.io.IOException(s"corrupt schema registry entry: $file", cause)
 }
 
 /** DeepDiff-style structural diff over JSON values (`ignore_order` list

@@ -46,16 +46,18 @@ object Clustering {
     * every arm), i.e. O(k²) sequential dot folds per row. Now the row's
     * self-dot binds once, the k distances are computed exactly once into an
     * array, and the pick is `array_position(d, array_min(d))` — the FIRST
-    // index of the minimum, which is the old foldRight's lowest-cid
+    * index of the minimum, which is the old foldRight's lowest-cid
     * tie-break verbatim (cents are sorted by cid). Identical per-distance
-    * arithmetic: (dvv + c·c) − 2·(v·c), same association.
+    * arithmetic: (dvv + c·c) − 2·(v·c), same association. A row whose
+    * distances are all null (a null vector) gets the cid -1, the old
+    * fold's no-match sentinel, not a null cid.
     */
   def assign(v: Column, cents: Seq[(Int, Array[Double])]): Column = {
     val cidArr = array(cents.map(c => lit(c._1)): _*)
     Similarity.bind1(Similarity.dot(v, v)) { dvv =>
       val darr = array(distsTo(v, dvv, cents).map(_._2): _*)
       Similarity.bind1(darr) { da =>
-        element_at(cidArr, array_position(da, array_min(da)).cast("int"))
+        coalesce(element_at(cidArr, array_position(da, array_min(da)).cast("int")), lit(-1))
       }
     }
   }

@@ -52,12 +52,17 @@ object Dedup {
         i => c.substr(i, lit(k)))))
       .otherwise(array().cast("array<string>"))
 
-  /** Jaccard similarity of two shingle-set columns (int/int → double). */
-  /** Round 18 (guide §1.2 step 2): |a ∪ b| = |a| + |b| − |a ∩ b| on the
-    * DISTINCT shingle arrays, so ONE hash-set intersection replaces the old
-    * intersect + union pair per candidate; the intersection size binds once
-    * (lambda variable) so the filter + output reuse it. The quotient is the
-    * same double: |union| is an exact small integer either way.
+  /** Jaccard similarity of two shingle-set columns (int/int → double).
+    *
+    * Precondition: `a` and `b` must be DISTINCT arrays (sets), as
+    * [[charShingles]], [[shingleHashes]] and [[shingleHashesFused]]
+    * produce. |a ∪ b| is computed as |a| + |b| − |a ∩ b|, which holds only
+    * for duplicate-free inputs: an array with repeats inflates |a| and
+    * returns a deflated, wrong Jaccard. One hash-set intersection per
+    * candidate (instead of intersect + union); the intersection size binds
+    * once (lambda variable) so the filter + output reuse it. The quotient is
+    * the same double as the union form: |union| is an exact small integer
+    * either way.
     */
   def jaccard(a: Column, b: Column): Column =
     Similarity.bind1(size(array_intersect(a, b)).cast("double")) { inter =>

@@ -38,12 +38,11 @@ object DedupGraph {
     // out of the same aggregate for the convergence accumulator) instead
     // of the old message join + groupBy + second labels join. Self-loop
     // duplicates (one per incident edge) are harmless under min/max.
-    // Round 18 (guide §2.4 — two operations keyed the same way share one
-    // exchange): the message stream persists HASH-PARTITIONED ON dst, the
-    // key every round's join probes, so the per-round plan exchanges ONLY
-    // the label table (|V| rows) — the 4·|E| message stream was previously
-    // re-shuffled by dst in every single round. At any scale the join
-    // re-shuffles the small side to match this partitioning, never bi.
+    // The message stream is persisted as it is produced (a plain
+    // `.persist()`, no partitioning): every round's join re-shuffles bi by
+    // dst along with the label table. Persisting bi hash-partitioned on dst
+    // would leave only the |V|-row label table to exchange per round (an
+    // open, unmeasured optimization).
     val bi = edges.select(explode(array(
         struct(col("a").as("src"), col("b").as("dst")),
         struct(col("b").as("src"), col("a").as("dst")),

@@ -21,14 +21,7 @@ class InferTypeSpec extends SparkSpec {
     }
   }
 
-  private val adversarial = Vector(
-    null, "", "   ", "123456", "007", "123.456", ".5", "5.", "TRUE", "False",
-    " true ", "NA", "USER7@EX.COM", "Clerk#000000951", "$1,234", "43%",
-    "2025-11-05", "2025-11-11T20:30:05Z", "11/31/2024", "Jan 5, 2024",
-    "10:30 Jan 5 2024", "3 PM Jan 5 2024", "1:23", "12 AM", "a1b2c3",
-    "2024", "31.12.2023", "5th Mar 2024", "Mon, 10 Feb 2025", "'24 Jan 5",
-    "123\n", "1 2 3", "- 5", "-5.5", "text, with comma", "10:30",
-    "2025-11-05.", "2025-11-05 ,", "  2025-11-05  ", "\t2025-11-05")
+  import InferTypeSpec.adversarial
 
   test("fused kernel ≡ Column chain on the parity corpus + adversarial shapes") {
     import scala.jdk.CollectionConverters._
@@ -60,4 +53,16 @@ class InferTypeSpec extends SparkSpec {
     assert(ProfileBuffer.rawTag("Mon, 10 Feb 2025") == "date")
     assert(ProfileBuffer.rawTag("2025-11-05.") == "date")
   }
+}
+
+object InferTypeSpec {
+  /** adversarial non-date and near-date shapes the reference battery exercises */
+  val adversarial: Vector[String] = Vector(
+    null, "", "   ", "123456", "007", "123.456", ".5", "5.", "TRUE", "False",
+    " true ", "NA", "USER7@EX.COM", "Clerk#000000951", "$1,234", "43%",
+    "2025-11-05", "2025-11-11T20:30:05Z", "11/31/2024", "Jan 5, 2024",
+    "10:30 Jan 5 2024", "3 PM Jan 5 2024", "1:23", "12 AM", "a1b2c3",
+    "2024", "31.12.2023", "5th Mar 2024", "Mon, 10 Feb 2025", "'24 Jan 5",
+    "123\n", "1 2 3", "- 5", "-5.5", "text, with comma", "10:30",
+    "2025-11-05.", "2025-11-05 ,", "  2025-11-05  ", "\t2025-11-05")
 }
