@@ -1,5 +1,7 @@
 package graft.etl
 
+import graft.core.Refusal
+
 /** DOCX text extraction (round 16 — the office-document front door
   * beyond PDF/HTML): an OOXML WordprocessingML walk composed from the
   * proven [[graft.ops.Zip]] reader + the JDK SAX parser. Semantics follow
@@ -36,16 +38,12 @@ object DocxText {
 
   /** `Right(text)` or `Left(errorKind)` — the fail-stop scan shape. */
   def extractSafe(bytes: Array[Byte]): Either[String, String] =
-    try Right(extract(bytes))
-    catch {
-      case e: graft.ops.Warc.WarcError => Left(e.kind)
-      case _: Exception => Left("bad_docx")
-    }
+    Refusal.attempt(extract(bytes), "bad_docx")
 
   def extract(bytes: Array[Byte]): String = {
     val members = graft.ops.Zip.read(bytes)
     val doc = members.find(_.name == "word/document.xml").getOrElse(
-      throw new graft.ops.Warc.WarcError("bad_docx",
+      throw new Refusal("bad_docx",
         "archive has no word/document.xml part"))
     parseDocumentXml(doc.body)
   }
@@ -111,13 +109,13 @@ object DocxText {
 
       private def append(c: Char): Unit = {
         if (out.length() >= cap)
-          throw new graft.ops.Warc.WarcError("too_large",
+          throw new Refusal("too_large",
             s"docx text exceeds $cap chars")
         out.append(c)
       }
       private def append(ch: Array[Char], start: Int, len: Int): Unit = {
         if (out.length() + len > cap)
-          throw new graft.ops.Warc.WarcError("too_large",
+          throw new Refusal("too_large",
             s"docx text exceeds $cap chars")
         out.append(ch, start, len)
       }

@@ -27,9 +27,9 @@ package graft.etl
   */
 object EpubText {
 
-  import graft.ops.Warc.WarcError
+  import graft.core.Refusal
 
-  private def bad(msg: String): Nothing = throw new WarcError("bad_epub", msg)
+  private def bad(msg: String): Nothing = throw new Refusal("bad_epub", msg)
 
   final case class Epub(title: String, language: String,
       chapters: Vector[String]) {
@@ -37,11 +37,7 @@ object EpubText {
   }
 
   def extractSafe(bytes: Array[Byte]): Either[String, Epub] =
-    try Right(extract(bytes))
-    catch {
-      case e: WarcError => Left(e.kind)
-      case _: Exception => Left("bad_epub")
-    }
+    Refusal.attempt(extract(bytes), "bad_epub")
 
   def extract(bytes: Array[Byte]): Epub = {
     val members = graft.ops.Zip.read(bytes)
@@ -107,7 +103,7 @@ object EpubText {
     } catch { case _: org.xml.sax.SAXException => () }
     try parser.parse(new java.io.ByteArrayInputStream(xml), handler)
     catch {
-      case e: WarcError => throw e
+      case e: Refusal => throw e
       case e: org.xml.sax.SAXException => bad(s"malformed XML: ${e.getMessage}")
     }
   }
@@ -198,14 +194,14 @@ object EpubText {
       override def characters(ch: Array[Char], start: Int, len: Int): Unit =
         if (bodyDepth > 0 && muted == 0) {
           if (out.length() + len > cap)
-            throw new WarcError("too_large", s"epub text exceeds $cap chars")
+            throw new Refusal("too_large", s"epub text exceeds $cap chars")
           out.append(ch, start, len)
         }
       override def resolveEntity(publicId: String, systemId: String): org.xml.sax.InputSource =
         new org.xml.sax.InputSource(new java.io.StringReader(""))
       private def append(c: Char): Unit = {
         if (out.length() >= cap)
-          throw new WarcError("too_large", s"epub text exceeds $cap chars")
+          throw new Refusal("too_large", s"epub text exceeds $cap chars")
         out.append(c)
       }
     })

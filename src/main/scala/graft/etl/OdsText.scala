@@ -28,9 +28,9 @@ package graft.etl
   */
 object OdsText {
 
-  import graft.ops.Warc.WarcError
+  import graft.core.Refusal
 
-  private def bad(msg: String): Nothing = throw new WarcError("bad_ods", msg)
+  private def bad(msg: String): Nothing = throw new Refusal("bad_ods", msg)
 
   private val OfficeNs = "urn:oasis:names:tc:opendocument:xmlns:office:1.0"
   private val TableNs = "urn:oasis:names:tc:opendocument:xmlns:table:1.0"
@@ -42,11 +42,7 @@ object OdsText {
   private val MaxRepeat = 100000
 
   def extractSafe(bytes: Array[Byte]): Either[String, String] =
-    try Right(extract(bytes))
-    catch {
-      case e: WarcError => Left(e.kind)
-      case _: Exception => Left("bad_ods")
-    }
+    Refusal.attempt(extract(bytes), "bad_ods")
 
   def extract(bytes: Array[Byte]): String = {
     val members = graft.ops.Zip.read(bytes)
@@ -196,7 +192,7 @@ object OdsText {
       override def characters(ch: Array[Char], start: Int, length: Int): Unit =
         if (inCellPara > 0) {
           if (cellText.length().toLong + length > cap)
-            throw new WarcError("too_large", s"ods text inflates past $cap bytes")
+            throw new Refusal("too_large", s"ods text inflates past $cap bytes")
           cellText.append(ch, start, length)
         }
 
@@ -207,7 +203,7 @@ object OdsText {
         out.append("sheet\t").append(sheetName)
         rows.foreach { r =>
           if (out.length().toLong + r.length + 8 > cap)
-            throw new WarcError("too_large", s"ods text inflates past $cap bytes")
+            throw new Refusal("too_large", s"ods text inflates past $cap bytes")
           out.append('\n').append(r.mkString("\t"))
         }
         sheetRows = null

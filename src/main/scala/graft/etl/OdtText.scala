@@ -1,5 +1,7 @@
 package graft.etl
 
+import graft.core.Refusal
+
 /** OpenDocument Text extraction (round 17 — the fourth office leg after
   * DOCX/XLSX/PPTX): an ODF 1.2 (OASIS) content walk composed from the
   * proven [[graft.ops.Zip]] reader + the hardened JDK SAX parser.
@@ -33,21 +35,17 @@ object OdtText {
     "urn:oasis:names:tc:opendocument:xmlns:text:1.0", "")
 
   def extractSafe(bytes: Array[Byte]): Either[String, String] =
-    try Right(extract(bytes))
-    catch {
-      case e: graft.ops.Warc.WarcError => Left(e.kind)
-      case _: Exception => Left("bad_odt")
-    }
+    Refusal.attempt(extract(bytes), "bad_odt")
 
   def extract(bytes: Array[Byte]): String = {
     val members = graft.ops.Zip.read(bytes)
     members.find(_.name == "mimetype").foreach { m =>
       val mt = new String(m.body, java.nio.charset.StandardCharsets.US_ASCII)
       if (!mt.startsWith("application/vnd.oasis.opendocument"))
-        throw new graft.ops.Warc.WarcError("bad_odt", s"foreign mimetype $mt")
+        throw new Refusal("bad_odt", s"foreign mimetype $mt")
     }
     val doc = members.find(_.name == "content.xml").getOrElse(
-      throw new graft.ops.Warc.WarcError("bad_odt",
+      throw new Refusal("bad_odt",
         "archive has no content.xml part"))
     parseContentXml(doc.body)
   }
@@ -68,7 +66,7 @@ object OdtText {
 
       private def grow(n: Int): Unit =
         if (out.length().toLong + n > cap)
-          throw new graft.ops.Warc.WarcError("too_large",
+          throw new Refusal("too_large",
             s"odt text inflates past $cap bytes")
 
       override def startElement(uri: String, local: String, qName: String,
@@ -85,7 +83,7 @@ object OdtText {
               .orElse(Option(atts.getValue("text:c")))
               .map(_.toInt).getOrElse(1)
             if (c < 0 || c > 1000000)
-              throw new graft.ops.Warc.WarcError("bad_odt", s"text:s c=$c")
+              throw new Refusal("bad_odt", s"text:s c=$c")
             grow(c)
             var i = 0
             while (i < c) { out.append(' '); i += 1 }
@@ -108,7 +106,7 @@ object OdtText {
     try XlsxText.parseXml("content.xml", xml, handler, kind = "bad_odt")
     catch {
       case _: NumberFormatException =>
-        throw new graft.ops.Warc.WarcError("bad_odt", "non-numeric text:s count")
+        throw new Refusal("bad_odt", "non-numeric text:s count")
     }
     out.toString
   }

@@ -26,17 +26,13 @@ package graft.etl
   */
 object PptxText {
 
-  import graft.ops.Warc.WarcError
+  import graft.core.Refusal
 
-  private def bad(msg: String): Nothing = throw new WarcError("bad_pptx", msg)
+  private def bad(msg: String): Nothing = throw new Refusal("bad_pptx", msg)
 
   /** `Right(text)` or `Left(errorKind)` — the fail-stop scan shape. */
   def extractSafe(bytes: Array[Byte]): Either[String, String] =
-    try Right(extract(bytes))
-    catch {
-      case e: WarcError => Left(e.kind)
-      case _: Exception => Left("bad_pptx")
-    }
+    Refusal.attempt(extract(bytes), "bad_pptx")
 
   def extract(bytes: Array[Byte]): String = {
     val members = graft.ops.Zip.read(bytes)
@@ -114,7 +110,7 @@ object PptxText {
 
       private def append(s: CharSequence): Unit = {
         if (out.length() + s.length > cap)
-          throw new WarcError("too_large", s"pptx text exceeds $cap chars")
+          throw new Refusal("too_large", s"pptx text exceeds $cap chars")
         out.append(s)
       }
 

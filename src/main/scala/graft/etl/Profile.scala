@@ -219,7 +219,15 @@ object EngineSchema {
 final class SchemaRegistry(dir: String) {
   import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
 
-  private def path(sourceId: String) = Paths.get(dir, s"${sourceId}_schema.json")
+  /** The entry's file. A source id is a plain file-name stem, so it can
+    * neither leave the registry directory nor collide with the hidden
+    * `.<id>_schema.json.<uuid>.tmp` names a save writes first.
+    */
+  private def path(sourceId: String) = {
+    require(SchemaRegistry.SourceId.matches(sourceId),
+      s"invalid schema registry source id '$sourceId': must match ${SchemaRegistry.SourceId}")
+    Paths.get(dir, s"${sourceId}_schema.json")
+  }
 
   /** the saved entry; None when there is none */
   def load(sourceId: String): Option[EngineSchema] = {
@@ -241,6 +249,7 @@ final class SchemaRegistry(dir: String) {
   }
 
   def save(sourceId: String, schema: EngineSchema): Unit = {
+    val target = path(sourceId)
     val d = Paths.get(dir)
     Files.createDirectories(d)
     // a unique name per save (concurrent savers never share a temp file),
@@ -254,13 +263,16 @@ final class SchemaRegistry(dir: String) {
         while (buf.hasRemaining) ch.write(buf)
         ch.force(true)
       } finally ch.close()
-      Files.move(tmp, path(sourceId), StandardCopyOption.ATOMIC_MOVE,
+      Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
         StandardCopyOption.REPLACE_EXISTING)
     } finally Files.deleteIfExists(tmp)
   }
 }
 
 object SchemaRegistry {
+  /** the source ids a registry accepts */
+  private val SourceId: scala.util.matching.Regex = "[A-Za-z0-9_][A-Za-z0-9._-]*".r
+
   /** a registry entry that is not a schema document */
   final class CorruptEntry(val file: java.nio.file.Path, cause: Throwable)
       extends java.io.IOException(s"corrupt schema registry entry: $file", cause)

@@ -21,9 +21,9 @@ package graft.etl
   */
 object RtfText {
 
-  import graft.ops.Warc.WarcError
+  import graft.core.Refusal
 
-  private def bad(msg: String): Nothing = throw new WarcError("bad_rtf", msg)
+  private def bad(msg: String): Nothing = throw new Refusal("bad_rtf", msg)
 
   private val SkipDests = Set("fonttbl", "colortbl", "stylesheet", "info",
     "pict", "header", "footer", "headerl", "headerr", "headerf",
@@ -34,11 +34,7 @@ object RtfText {
   private val Cp1252 = java.nio.charset.Charset.forName("windows-1252")
 
   def extractSafe(bytes: Array[Byte]): Either[String, String] =
-    try Right(extract(bytes))
-    catch {
-      case e: WarcError => Left(e.kind)
-      case _: Exception => Left("bad_rtf")
-    }
+    Refusal.attempt(extract(bytes), "bad_rtf")
 
   def extract(bytes: Array[Byte]): String = {
     val n = bytes.length
@@ -49,7 +45,7 @@ object RtfText {
     val out = new java.lang.StringBuilder()
     def grow(k: Int): Unit =
       if (out.length().toLong + k > cap)
-        throw new WarcError("too_large", s"rtf text inflates past $cap bytes")
+        throw new Refusal("too_large", s"rtf text inflates past $cap bytes")
 
     // group state: (uc skip count, inside-skipped-destination)
     var ucStack = List((1, false))

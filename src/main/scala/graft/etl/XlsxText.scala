@@ -39,9 +39,9 @@ package graft.etl
   */
 object XlsxText {
 
-  import graft.ops.Warc.WarcError
+  import graft.core.Refusal
 
-  private def bad(msg: String): Nothing = throw new WarcError("bad_xlsx", msg)
+  private def bad(msg: String): Nothing = throw new Refusal("bad_xlsx", msg)
 
   // ---------------------------------------------------------------------
   // hardened SAX plumbing (one factory per thread; newSAXParser is cheap)
@@ -64,9 +64,9 @@ object XlsxText {
     try factories.get().newSAXParser()
       .parse(new java.io.ByteArrayInputStream(xml), handler)
     catch {
-      case e: WarcError => throw e
+      case e: Refusal => throw e
       case e: org.xml.sax.SAXException =>
-        throw new WarcError(kind, s"malformed $part: ${e.getMessage}")
+        throw new Refusal(kind, s"malformed $part: ${e.getMessage}")
     }
 
   // ---------------------------------------------------------------------
@@ -75,11 +75,7 @@ object XlsxText {
 
   /** `Right(text)` or `Left(errorKind)` — the fail-stop scan shape. */
   def extractSafe(bytes: Array[Byte]): Either[String, String] =
-    try Right(extract(bytes))
-    catch {
-      case e: WarcError => Left(e.kind)
-      case _: Exception => Left("bad_xlsx")
-    }
+    Refusal.attempt(extract(bytes), "bad_xlsx")
 
   def extract(bytes: Array[Byte]): String = {
     val members = graft.ops.Zip.read(bytes)
@@ -250,7 +246,7 @@ object XlsxText {
 
       private def append(s: String): Unit = {
         if (out.length() + s.length > cap)
-          throw new WarcError("too_large", s"xlsx text exceeds $cap chars")
+          throw new Refusal("too_large", s"xlsx text exceeds $cap chars")
         out.append(s)
       }
 

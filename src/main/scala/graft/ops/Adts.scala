@@ -29,9 +29,9 @@ package graft.ops
   */
 object Adts {
 
-  import Warc.WarcError
+  import graft.core.Refusal
 
-  private def bad(msg: String): Nothing = throw new WarcError("bad_frame", msg)
+  private def bad(msg: String): Nothing = throw new Refusal("bad_frame", msg)
 
   /** sampling_frequency_index → Hz (13 entries; 13/14 reserved, 15 is
     * the explicit-frequency escape ADTS forbids)
@@ -57,7 +57,7 @@ object Adts {
 
   def parse(bytes: Array[Byte]): AdtsMeta = {
     def u8(p: Int): Int = bytes(p) & 0xff
-    if (bytes.length < 7) throw new WarcError("truncated",
+    if (bytes.length < 7) throw new Refusal("truncated",
       s"${bytes.length} bytes is shorter than one ADTS header")
     var p = 0
     var mpegVersion = 0
@@ -70,7 +70,7 @@ object Adts {
     var payloadBytes = 0L
     while (p < bytes.length) {
       if (p + 7 > bytes.length)
-        throw new WarcError("truncated", s"header at $p crosses the end")
+        throw new Refusal("truncated", s"header at $p crosses the end")
       if (u8(p) != 0xff || (u8(p + 1) & 0xf0) != 0xf0)
         bad(f"no syncword at $p: 0x${u8(p)}%02x${u8(p + 1)}%02x")
       val id = (u8(p + 1) >> 3) & 1
@@ -90,7 +90,7 @@ object Adts {
       if (frameLen < headerLen)
         bad(s"frame length $frameLen shorter than its $headerLen-byte header at $p")
       if (p + frameLen > bytes.length)
-        throw new WarcError("truncated", s"frame at $p of $frameLen bytes")
+        throw new Refusal("truncated", s"frame at $p of $frameLen bytes")
       if (nFrames == 0L) {
         mpegVersion = if (id == 0) 4 else 2
         profile = prof; sfi = fIdx; channels = chanCfg
@@ -109,11 +109,7 @@ object Adts {
   }
 
   def parseSafe(bytes: Array[Byte]): Either[String, AdtsMeta] =
-    try Right(parse(bytes))
-    catch {
-      case e: WarcError => Left(e.kind)
-      case _: Exception => Left("bad_frame")
-    }
+    Refusal.attempt(parse(bytes), "bad_frame")
 
   // ------------------------------------------------------------- write --
 

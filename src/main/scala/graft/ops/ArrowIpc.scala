@@ -2,6 +2,8 @@ package graft.ops
 
 import java.nio.charset.StandardCharsets.UTF_8
 
+import graft.core.Refusal
+
 /** Arrow IPC *stream* format — the zero-copy interchange container a
   * training stack consumes (pyarrow/torch dataloaders, DuckDB, Polars
   * all speak it natively): encapsulated messages of
@@ -70,10 +72,8 @@ object ArrowIpc {
     }
   }
 
-  final class ArrowError(val kind: String, msg: String)
-      extends RuntimeException(s"$kind: $msg")
   private def fail(kind: String, msg: String): Nothing =
-    throw new ArrowError(kind, msg)
+    throw new Refusal(kind, s"$kind: $msg")
 
   // --------------------------------------------- flatbuffers (reading) --
 
@@ -291,11 +291,7 @@ object ArrowIpc {
   }
 
   def readSafe(bytes: Array[Byte]): Either[String, Vector[Batch]] =
-    try Right(read(bytes))
-    catch {
-      case e: ArrowError => Left(e.kind)
-      case _: Exception  => Left("bad_stream")
-    }
+    Refusal.attempt(read(bytes), "bad_stream")
 
   private def parseSchema(fb: Fb, sch: Int): Vector[AField] = {
     val endian = { val f = fb.field(sch, 0); if (f < 0) 0 else fb.i16(f) }

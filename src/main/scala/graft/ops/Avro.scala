@@ -4,6 +4,7 @@ import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.zip.{Deflater, Inflater}
 
+import graft.core.Refusal
 import graft.etl.{JArr, JObj, JStr, Json}
 
 /** Avro object-container codec (Apache Avro 1.11 specification, binary
@@ -116,7 +117,7 @@ object Avro {
     def remaining: Int = bytes.length - pos
     def need(n: Int, what: String): Unit =
       if (remaining < n)
-        throw new Warc.WarcError("truncated", s"avro $what ends early")
+        throw new Refusal("truncated", s"avro $what ends early")
     def take(n: Int, what: String): Array[Byte] = {
       need(n, what)
       val r = java.util.Arrays.copyOfRange(bytes, pos, pos + n)
@@ -130,7 +131,7 @@ object Avro {
         b = bytes(pos) & 0xff
         pos += 1
         if (shift >= 64)
-          throw new Warc.WarcError("bad_record", s"avro $what varint overruns")
+          throw new Refusal("bad_record", s"avro $what varint overruns")
         z |= (b & 0x7fL) << shift
         shift += 7
       } while ((b & 0x80) != 0)
@@ -139,7 +140,7 @@ object Avro {
     def readLen(what: String): Int = {
       val n = readVarLong(what)
       if (n < 0 || n > remaining)
-        throw new Warc.WarcError("bad_record", s"avro $what length $n invalid")
+        throw new Refusal("bad_record", s"avro $what length $n invalid")
       n.toInt
     }
   }
@@ -149,13 +150,13 @@ object Avro {
       c.readVarLong("union index") match {
         case 0L => null
         case 1L => readValue(c, opt.dropRight(1))
-        case i => throw new Warc.WarcError("bad_record", s"union branch $i of 2")
+        case i => throw new Refusal("bad_record", s"union branch $i of 2")
       }
     case "long"    => c.readVarLong("long")
     case "int"     =>
       val v = c.readVarLong("int")
       if (v < Int.MinValue || v > Int.MaxValue)
-        throw new Warc.WarcError("bad_record", s"avro int out of range: $v")
+        throw new Refusal("bad_record", s"avro int out of range: $v")
       v.toInt
     case "string"  => new String(c.take(c.readLen("string"), "string"), UTF_8)
     case "bytes"   => c.take(c.readLen("bytes"), "bytes")
@@ -163,7 +164,7 @@ object Avro {
       c.need(1, "boolean")
       val b = c.bytes(c.pos); c.pos += 1
       if (b != 0 && b != 1)
-        throw new Warc.WarcError("bad_record", s"avro boolean byte $b")
+        throw new Refusal("bad_record", s"avro boolean byte $b")
       b == 1
     case "double"  =>
       val raw = c.take(8, "double")
@@ -226,11 +227,11 @@ object Avro {
     out.toByteArray
   }
 
-  /** Strict read: schema + all records, or a typed [[Warc.WarcError]]. */
+  /** Strict read: schema + all records, or a typed [[graft.core.Refusal]]. */
   def read(bytes: Array[Byte]): (Schema, Vector[Record]) = {
     val c = new Cursor(bytes)
     if (bytes.length < 4 || !Magic.indices.forall(i => bytes(i) == Magic(i)))
-      throw new Warc.WarcError("bad_magic", "not an avro container")
+      throw new Refusal("bad_magic", "not an avro container")
     c.pos = 4
     // metadata map
     var meta = Map.empty[String, Array[Byte]]
@@ -249,16 +250,16 @@ object Avro {
       count = c.readVarLong("meta count")
     }
     val schemaJson = meta.getOrElse("avro.schema",
-      throw new Warc.WarcError("bad_meta", "missing avro.schema"))
+      throw new Refusal("bad_meta", "missing avro.schema"))
     val codec = meta.get("avro.codec").map(new String(_, UTF_8)).getOrElse("null")
     if (codec != "null" && codec != "deflate")
-      throw new Warc.WarcError("bad_codec", s"unsupported codec $codec")
+      throw new Refusal("bad_codec", s"unsupported codec $codec")
     val schema = parseSchema(new String(schemaJson, UTF_8))
     val sync = c.take(16, "sync marker")
     val recs = Vector.newBuilder[Record]
     while (c.remaining > 0) {
       val n = c.readVarLong("block count")
-      if (n < 0) throw new Warc.WarcError("bad_record", s"negative block count $n")
+      if (n < 0) throw new Refusal("bad_record", s"negative block count $n")
       val size = c.readLen("block size")
       val data = c.take(size, "block data")
       val raw = if (codec == "deflate") inflateRaw(data) else data
@@ -269,11 +270,11 @@ object Avro {
         i += 1
       }
       if (bc.remaining != 0)
-        throw new Warc.WarcError("bad_record",
+        throw new Refusal("bad_record",
           s"block has ${bc.remaining} bytes past its $n records")
       val s2 = c.take(16, "sync marker")
       if (!java.util.Arrays.equals(sync, s2))
-        throw new Warc.WarcError("bad_sync", "sync marker mismatch")
+        throw new Refusal("bad_sync", "sync marker mismatch")
     }
     (schema, recs.result())
   }
@@ -282,11 +283,7 @@ object Avro {
     * contract for fault-tolerant shard scans.
     */
   def readSafe(bytes: Array[Byte]): Either[String, (Schema, Vector[Record])] =
-    try Right(read(bytes))
-    catch {
-      case e: Warc.WarcError => Left(e.kind)
-      case _: Exception => Left("bad_record")
-    }
+    Refusal.attempt(read(bytes), "bad_record")
 
   /** Reader-schema field spec: name, type, and (for fields absent from a
     * writer's schema) the default value — `None` means the field is
@@ -318,12 +315,12 @@ object Avro {
       writerIdx.get(rf.name) match {
         case Some((wt, wi)) =>
           if (!promotes(wt, rf.tpe))
-            throw new Warc.WarcError("bad_schema",
+            throw new Refusal("bad_schema",
               s"field ${rf.name}: writer $wt does not resolve to reader ${rf.tpe}")
           Right((wi, wt, rf.tpe))
         case None => rf.default match {
           case Some(d) => Left(d)
-          case None => throw new Warc.WarcError("bad_schema",
+          case None => throw new Refusal("bad_schema",
             s"required reader field ${rf.name} missing from writer schema")
         }
       }
@@ -339,11 +336,7 @@ object Avro {
   /** readResolved with the typed-refusal contract. */
   def readResolvedSafe(bytes: Array[Byte],
       reader: Seq[ReaderField]): Either[String, Vector[Record]] =
-    try Right(readResolved(bytes, reader))
-    catch {
-      case e: Warc.WarcError => Left(e.kind)
-      case _: Exception => Left("bad_record")
-    }
+    Refusal.attempt(readResolved(bytes, reader), "bad_record")
 
   private def promotes(writer: String, reader: String): Boolean = {
     if (writer == reader) return true
@@ -374,13 +367,13 @@ object Avro {
   private def parseSchema(json: String): Schema = {
     val obj = Json.parseOpt(json) match {
       case Some(o: JObj) => o.fields.toMap
-      case _ => throw new Warc.WarcError("bad_meta", "schema is not a JSON object")
+      case _ => throw new Refusal("bad_meta", "schema is not a JSON object")
     }
     if (!obj.get("type").contains(JStr("record")))
-      throw new Warc.WarcError("bad_meta", "only record schemas supported")
+      throw new Refusal("bad_meta", "only record schemas supported")
     val name = obj.get("name") match {
       case Some(JStr(s)) => s
-      case _ => throw new Warc.WarcError("bad_meta", "record schema lacks a name")
+      case _ => throw new Refusal("bad_meta", "record schema lacks a name")
     }
     val fields = obj.get("fields") match {
       case Some(JArr(items)) if items.nonEmpty =>
@@ -394,16 +387,16 @@ object Avro {
               case (Some(JStr(n)), Some(JArr(Vector(JStr("null"), JStr(t)))))
                   if PrimTypes(t) => (n, t + "?")
               case (_, Some(JStr(t))) =>
-                throw new Warc.WarcError("bad_meta", s"unsupported field type $t")
+                throw new Refusal("bad_meta", s"unsupported field type $t")
               case (_, Some(a: JArr)) =>
-                throw new Warc.WarcError("bad_meta",
+                throw new Refusal("bad_meta",
                   s"unsupported union shape ${Json.render(a)}")
               case _ =>
-                throw new Warc.WarcError("bad_meta", "malformed schema field")
+                throw new Refusal("bad_meta", "malformed schema field")
             }
-          case _ => throw new Warc.WarcError("bad_meta", "malformed schema field")
+          case _ => throw new Refusal("bad_meta", "malformed schema field")
         }
-      case _ => throw new Warc.WarcError("bad_meta", "record schema lacks fields")
+      case _ => throw new Refusal("bad_meta", "record schema lacks fields")
     }
     Schema(name, fields)
   }
@@ -428,15 +421,15 @@ object Avro {
       while (!inf.finished()) {
         val n = inf.inflate(buf)
         if (n == 0 && inf.needsInput())
-          throw new Warc.WarcError("truncated", "deflate block ends early")
+          throw new Refusal("truncated", "deflate block ends early")
         out.write(buf, 0, n)
         if (out.size().toLong > cap)
-          throw new Warc.WarcError("too_large",
+          throw new Refusal("too_large",
             s"avro block inflates past $cap bytes")
       }
     } catch {
       case e: java.util.zip.DataFormatException =>
-        throw new Warc.WarcError("bad_record", s"corrupt deflate block: ${e.getMessage}")
+        throw new Refusal("bad_record", s"corrupt deflate block: ${e.getMessage}")
     } finally inf.end()
     out.toByteArray
   }

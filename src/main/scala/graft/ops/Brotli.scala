@@ -36,9 +36,9 @@ package graft.ops
   */
 object Brotli {
 
-  import Warc.WarcError
+  import graft.core.Refusal
 
-  private def bad(msg: String): Nothing = throw new WarcError("bad_frame", msg)
+  private def bad(msg: String): Nothing = throw new Refusal("bad_frame", msg)
 
   // ------------------------------------------------------------ resources
 
@@ -450,11 +450,11 @@ object Brotli {
 
     def ensure(n: Int): Unit = {
       if (len.toLong + n > cap)
-        throw new WarcError("too_large", s"brotli inflates past $cap bytes")
+        throw new Refusal("too_large", s"brotli inflates past $cap bytes")
       // a JVM array cannot exceed ~Int.MaxValue: with a raised budget the
       // refusal must still be typed, not an OOM/AIOOBE past the clamp
       if (len.toLong + n > Int.MaxValue - 8)
-        throw new WarcError("too_large", "brotli inflates past the 2 GiB array bound")
+        throw new Refusal("too_large", "brotli inflates past the 2 GiB array bound")
       if (len + n > buf.length) {
         var nl = buf.length.toLong * 2
         while (nl < len.toLong + n) nl *= 2
@@ -527,11 +527,7 @@ object Brotli {
   }
 
   def decompressSafe(bytes: Array[Byte]): Either[String, Array[Byte]] =
-    try Right(decompress(bytes))
-    catch {
-      case e: WarcError  => Left(e.kind)
-      case _: Exception  => Left("bad_frame")
-    }
+    Refusal.attempt(decompress(bytes), "bad_frame")
 
   def decompress(bytes: Array[Byte]): Array[Byte] = {
     if (bytes.isEmpty) bad("empty input")

@@ -31,9 +31,9 @@ package graft.ops
   */
 object Bzip2 {
 
-  import Warc.WarcError
+  import graft.core.Refusal
 
-  private def bad(msg: String): Nothing = throw new WarcError("bad_frame", msg)
+  private def bad(msg: String): Nothing = throw new Refusal("bad_frame", msg)
 
   def isBzip2(bytes: Array[Byte]): Boolean =
     bytes.length >= 4 && bytes(0) == 'B' && bytes(1) == 'Z' &&
@@ -160,7 +160,7 @@ object Bzip2 {
     * one payload, matching libbz2 / python `bz2.decompress` / pbzip2).
     */
   def decompress(bytes: Array[Byte]): Array[Byte] = {
-    if (!isBzip2(bytes)) throw new WarcError("bad_magic", "not a bzip2 stream")
+    if (!isBzip2(bytes)) throw new Refusal("bad_magic", "not a bzip2 stream")
     val out = new java.io.ByteArrayOutputStream(math.min(bytes.length.toLong * 4, 1 << 20).toInt)
     var off = 0
     while (off < bytes.length) {
@@ -174,8 +174,7 @@ object Bzip2 {
   }
 
   def decompressSafe(bytes: Array[Byte]): Either[String, Array[Byte]] =
-    try Right(decompress(bytes))
-    catch { case e: WarcError => Left(e.kind) }
+    Refusal.attempt(decompress(bytes))
 
   /** Decode one stream starting at `off`; returns its byte length. */
   private def decodeStream(bytes: Array[Byte], off: Int,
@@ -440,7 +439,7 @@ object Bzip2 {
           r += 1
         }
         if (produced > cap)
-          throw new WarcError("too_large", s"bzip2 inflates past $cap bytes")
+          throw new Refusal("too_large", s"bzip2 inflates past $cap bytes")
         expectCount = false
         runByte = -1
         runLen = 0
@@ -450,7 +449,7 @@ object Bzip2 {
         out.write(b)
         produced += 1
         if (produced > cap)
-          throw new WarcError("too_large", s"bzip2 inflates past $cap bytes")
+          throw new Refusal("too_large", s"bzip2 inflates past $cap bytes")
         if (runLen == 4) expectCount = true
       }
     }

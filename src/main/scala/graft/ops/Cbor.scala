@@ -2,6 +2,7 @@ package graft.ops
 
 import java.nio.charset.StandardCharsets.UTF_8
 
+import graft.core.Refusal
 import graft.etl.{JArr, JBool, JFloat, JInt, JNull, JObj, JStr, JVal}
 
 /** CBOR codec (RFC 8949) over the repo's JSON value model
@@ -32,7 +33,7 @@ import graft.etl.{JArr, JBool, JFloat, JInt, JNull, JObj, JStr, JVal}
 object Cbor {
 
   private def fail(kind: String, msg: String): Nothing =
-    throw new Warc.WarcError(kind, msg)
+    throw new Refusal(kind, msg)
 
   // ------------------------------------------------------------- write --
 
@@ -220,6 +221,5 @@ object Cbor {
   }
 
   def decodeAllSafe(bytes: Array[Byte]): Either[String, Seq[JVal]] =
-    try Right(decodeAll(bytes))
-    catch { case e: Warc.WarcError => Left(e.kind) }
+    Refusal.attempt(decodeAll(bytes))
 }

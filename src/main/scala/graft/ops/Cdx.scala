@@ -18,9 +18,9 @@ package graft.ops
   */
 object Cdx {
 
-  import Warc.WarcError
+  import graft.core.Refusal
 
-  private def fail(msg: String): Nothing = throw new WarcError("bad_record", msg)
+  private def fail(msg: String): Nothing = throw new Refusal("bad_record", msg)
 
   final case class Capture(surt: String, timestamp: String, url: String,
       mime: String, status: Int, digest: String, length: Long,
@@ -120,9 +120,5 @@ object Cdx {
   }
 
   def parseLineSafe(line: String): Either[String, Capture] =
-    try Right(parseLine(line))
-    catch {
-      case e: WarcError => Left(e.kind)
-      case _: Exception => Left("bad_record")
-    }
+    Refusal.attempt(parseLine(line), "bad_record")
 }

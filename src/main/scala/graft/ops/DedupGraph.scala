@@ -120,8 +120,6 @@ object DedupGraph {
       converged = acc.value == 0L
       labels = if (converged) stepped else jump(stepped)
       i += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(s"cc round $i converged=$converged t=${System.nanoTime() / 1000000}")
     }
     bi.unpersist()
     // A non-converged labeling is silently WRONG (partial components), so

@@ -1,5 +1,7 @@
 package graft.ops
 
+import graft.core.Refusal
+
 /** EXIF metadata audit + scrub over JPEG containers — the
   * metadata-governance pass a multimodal crawl pipeline runs before
   * training (EXIF carries GPS positions, device serials, and timestamps:
@@ -27,12 +29,12 @@ object Exif {
       hasExifIfd: Boolean)
 
   private def fail(kind: String, msg: String): Nothing =
-    throw new Warc.WarcError(kind, msg)
+    throw new Refusal(kind, msg)
 
   def parseSafe(jpeg: Array[Byte]): Either[String, Meta] =
     try Right(parse(jpeg))
     catch {
-      case e: Warc.WarcError => Left(e.kind)
+      case e: Refusal => Left(e.kind)
       // backstop: a crafted offset that slips past a bounds check must
       // surface as a typed refusal, never fail the whole scan
       case _: RuntimeException => Left("malformed")

@@ -2,6 +2,8 @@ package graft.ops
 
 import java.nio.charset.StandardCharsets.UTF_8
 
+import graft.core.Refusal
+
 /** FLAC metadata codec — STREAMINFO + Vorbis-comment parsing/emission
   * for the third audio container the engine audits (MP3 frame headers:
   * [[Mp3]]; WAV PCM: [[Wav]]; FLAC: here). Corpus-scale audio curation
@@ -29,10 +31,8 @@ object Flac {
       vendor: String, comments: Vector[(String, String)],
       nBlocks: Int, paddingBytes: Long)
 
-  final class FlacError(val kind: String, msg: String)
-      extends RuntimeException(s"$kind: $msg")
   private def fail(kind: String, msg: String): Nothing =
-    throw new FlacError(kind, msg)
+    throw new Refusal(kind, s"$kind: $msg")
 
   // ------------------------------------------------------------- write --
 
@@ -175,9 +175,5 @@ object Flac {
   }
 
   def readSafe(bytes: Array[Byte]): Either[String, FlacMeta] =
-    try Right(read(bytes))
-    catch {
-      case e: FlacError => Left(e.kind)
-      case _: Exception => Left("bad_streaminfo")
-    }
+    Refusal.attempt(read(bytes), "bad_streaminfo")
 }

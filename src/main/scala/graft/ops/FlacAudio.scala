@@ -25,9 +25,10 @@ package graft.ops
   */
 object FlacAudio {
 
-  import Flac.{FlacError, FlacMeta}
+  import graft.core.Refusal
+  import Flac.FlacMeta
   private def fail(kind: String, msg: String): Nothing =
-    throw new FlacError(kind, msg)
+    throw new Refusal(kind, s"$kind: $msg")
 
   // ------------------------------------------------------------- bits --
 
@@ -167,11 +168,7 @@ object FlacAudio {
   }
 
   def decodeSafe(bytes: Array[Byte]): Either[String, (FlacMeta, Array[Array[Int]])] =
-    try Right(decode(bytes))
-    catch {
-      case e: FlacError => Left(e.kind)
-      case _: Exception => Left("bad_frame")
-    }
+    Refusal.attempt(decode(bytes), "bad_frame")
 
   /** One frame starting at `off`; fills pcm[*][base ..) and returns
     * (samples decoded, next byte offset).

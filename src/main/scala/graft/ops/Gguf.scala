@@ -31,9 +31,9 @@ package graft.ops
   */
 object Gguf {
 
-  import Warc.WarcError
+  import graft.core.Refusal
 
-  private def bad(msg: String): Nothing = throw new WarcError("bad_frame", msg)
+  private def bad(msg: String): Nothing = throw new Refusal("bad_frame", msg)
 
   sealed trait MetaVal
   final case class MString(s: String) extends MetaVal
@@ -48,7 +48,7 @@ object Gguf {
     def elements: Long = dims.foldLeft(1L) { (acc, d) =>
       val v = acc * d
       if (acc != 0 && (v / acc != d || v > (1L << 40)))
-        throw new WarcError("too_large", s"$name: ${dims.mkString("x")} elements")
+        throw new Refusal("too_large", s"$name: ${dims.mkString("x")} elements")
       v
     }
     def byteSize: Long = ggmlType match {
@@ -56,28 +56,28 @@ object Gguf {
       case 1 => elements * 2 // F16
       case 2 => // Q4_0: 32-element blocks of f16 scale + 16 nibble-packed bytes
         if (dims.head % 32 != 0)
-          throw new WarcError("bad_frame", s"$name: Q4_0 row ${dims.head} not a multiple of 32")
+          throw new Refusal("bad_frame", s"$name: Q4_0 row ${dims.head} not a multiple of 32")
         elements / 32 * 18
       case 8 => // Q8_0: 32-element blocks of f16 scale + 32 int8 quants
         if (dims.head % 32 != 0)
-          throw new WarcError("bad_frame", s"$name: Q8_0 row ${dims.head} not a multiple of 32")
+          throw new Refusal("bad_frame", s"$name: Q8_0 row ${dims.head} not a multiple of 32")
         elements / 32 * 34
       case 12 => // Q4_K: 256-element super-blocks, 144 bytes (d, dmin,
         // 12 packed 6-bit scale/min bytes, 128 nibble-packed quants)
         if (dims.head % 256 != 0)
-          throw new WarcError("bad_frame", s"$name: Q4_K row ${dims.head} not a multiple of 256")
+          throw new Refusal("bad_frame", s"$name: Q4_K row ${dims.head} not a multiple of 256")
         elements / 256 * 144
       case 13 => // Q5_K: 256-element super-blocks, 176 bytes (d, dmin,
         // 12 packed scale bytes, 32 qh high-bit bytes, 128 nibble bytes)
         if (dims.head % 256 != 0)
-          throw new WarcError("bad_frame", s"$name: Q5_K row ${dims.head} not a multiple of 256")
+          throw new Refusal("bad_frame", s"$name: Q5_K row ${dims.head} not a multiple of 256")
         elements / 256 * 176
       case 14 => // Q6_K: 256-element super-blocks, 210 bytes (128 ql,
         // 64 qh, 16 int8 sub-scales, f16 d)
         if (dims.head % 256 != 0)
-          throw new WarcError("bad_frame", s"$name: Q6_K row ${dims.head} not a multiple of 256")
+          throw new Refusal("bad_frame", s"$name: Q6_K row ${dims.head} not a multiple of 256")
         elements / 256 * 210
-      case t => throw new WarcError("unsupported", s"ggml tensor type $t")
+      case t => throw new Refusal("unsupported", s"ggml tensor type $t")
     }
   }
 
@@ -197,7 +197,7 @@ object Gguf {
             out(i) = d * sc * q
             i += 1
           }
-        case t2 => throw new WarcError("unsupported", s"ggml tensor type $t2")
+        case t2 => throw new Refusal("unsupported", s"ggml tensor type $t2")
       }
       out
     }
@@ -219,7 +219,7 @@ object Gguf {
     var pos = 0
     def need(n: Long): Unit =
       if (n < 0 || pos.toLong + n > b.length)
-        throw new WarcError("truncated", s"need $n at $pos of ${b.length}")
+        throw new Refusal("truncated", s"need $n at $pos of ${b.length}")
     def u32(): Long = {
       need(4)
       val v = (b(pos) & 0xffL) | ((b(pos + 1) & 0xffL) << 8) |
@@ -273,12 +273,12 @@ object Gguf {
         if (et == 9) bad("nested metadata arrays")
         val n = r.u64()
         if (n < 0 || n > (1L << 20))
-          throw new WarcError("too_large", s"metadata array of $n")
+          throw new Refusal("too_large", s"metadata array of $n")
         MArray(Vector.fill(n.toInt)(readValue(r, et, depth + 1)))
       case 10 => MInt(r.u64()) // uint64 (may wrap negative past 2^63 — callers treat as raw bits)
       case 11 => MInt(r.u64()) // int64
       case 12 => MFloat(java.lang.Double.longBitsToDouble(r.u64()))
-      case other => throw new WarcError("unsupported", s"metadata value type $other")
+      case other => throw new Refusal("unsupported", s"metadata value type $other")
     }
   }
 
@@ -286,10 +286,10 @@ object Gguf {
     val r = new Reader(bytes)
     if (bytes.length < 4 || bytes(0) != 'G' || bytes(1) != 'G' ||
         bytes(2) != 'U' || bytes(3) != 'F')
-      throw new WarcError("bad_magic", "no GGUF magic")
+      throw new Refusal("bad_magic", "no GGUF magic")
     r.pos = 4
     val version = r.u32()
-    if (version != 3) throw new WarcError("unsupported", s"GGUF version $version")
+    if (version != 3) throw new Refusal("unsupported", s"GGUF version $version")
     val nTensors = r.u64()
     val nKv = r.u64()
     if (nTensors < 0 || nTensors > (1L << 20)) bad(s"tensor count $nTensors")
@@ -323,7 +323,7 @@ object Gguf {
       val p = r.pos.toLong
       ((p + alignment - 1) / alignment) * alignment
     }
-    if (dataStart > bytes.length) throw new WarcError("truncated", "no data section")
+    if (dataStart > bytes.length) throw new Refusal("truncated", "no data section")
     val dataLen = bytes.length - dataStart
     // monotone, overlap-free, aligned, in-bounds regions; the gap before
     // each tensor may only be alignment padding
@@ -334,11 +334,11 @@ object Gguf {
       if (t.offset < expected) bad(s"${t.name}: overlapping region")
       if (t.offset - expected >= alignment) bad(s"${t.name}: oversized gap")
       val sz = t.byteSize
-      if (t.offset + sz > dataLen) throw new WarcError("truncated",
+      if (t.offset + sz > dataLen) throw new Refusal("truncated",
         s"${t.name}: [${t.offset}, ${t.offset + sz}) past data section $dataLen")
       total += sz
       if (total > graft.core.Budget.maxInflatedBytes)
-        throw new WarcError("too_large", s"tensors declare $total bytes past the budget")
+        throw new Refusal("too_large", s"tensors declare $total bytes past the budget")
       expected = t.offset + sz
     }
     if (dataLen - expected >= alignment) bad("trailing garbage after the last tensor")
@@ -347,11 +347,7 @@ object Gguf {
   }
 
   def readSafe(bytes: Array[Byte]): Either[String, Model] =
-    try Right(read(bytes))
-    catch {
-      case e: WarcError => Left(e.kind)
-      case _: Exception => Left("bad_frame")
-    }
+    Refusal.attempt(read(bytes), "bad_frame")
 
   // ------------------------------------------------------------- write --
 

@@ -23,11 +23,11 @@ package graft.ops
   */
 object Id3 {
 
-  import Warc.WarcError
+  import graft.core.Refusal
 
-  private def bad(msg: String): Nothing = throw new WarcError("bad_frame", msg)
+  private def bad(msg: String): Nothing = throw new Refusal("bad_frame", msg)
   private def unsup(msg: String): Nothing =
-    throw new WarcError("unsupported", msg)
+    throw new Refusal("unsupported", msg)
 
   /** one frame: decoded text for text/TXXX/COMM frames, empty for binary ids */
   final case class Frame(id: String, text: String, bodyBytes: Int)
@@ -51,27 +51,23 @@ object Id3 {
   }
 
   def parseSafe(b: Array[Byte]): Either[String, Tag] =
-    try Right(parse(b))
-    catch {
-      case e: WarcError => Left(e.kind)
-      case _: Exception => Left("bad_frame")
-    }
+    Refusal.attempt(parse(b), "bad_frame")
 
   /** Parse the leading ID3v2 tag of `b` (a bare tag or a whole MP3). */
   def parse(b: Array[Byte]): Tag = {
     if (b.length < 10 || b(0) != 'I' || b(1) != 'D' || b(2) != '3')
-      throw new WarcError("bad_magic", "no ID3v2 header")
+      throw new Refusal("bad_magic", "no ID3v2 header")
     val major = u8(b, 3)
     if (major != 3 && major != 4) unsup(s"ID3v2.$major")
     val flags = u8(b, 5)
     if ((flags & 0x80) != 0) unsup("tag-level unsynchronisation")
     val size = syncsafe(b, 6)
     if (10 + size > b.length)
-      throw new WarcError("truncated", s"tag size $size past end")
+      throw new Refusal("truncated", s"tag size $size past end")
     val end = 10 + size
     var p = 10
     if ((flags & 0x40) != 0) { // extended header
-      if (p + 4 > end) throw new WarcError("truncated", "extended header")
+      if (p + 4 > end) throw new Refusal("truncated", "extended header")
       val ext =
         if (major == 4) syncsafe(b, p) // v2.4: includes its own size
         else 4 + ((u8(b, p) << 24) | (u8(b, p + 1) << 16) |

@@ -24,9 +24,9 @@ package graft.ops
   */
 object Isobmff {
 
-  import Warc.WarcError
+  import graft.core.Refusal
 
-  private def fail(kind: String, msg: String): Nothing = throw new WarcError(kind, msg)
+  private def fail(kind: String, msg: String): Nothing = throw new Refusal(kind, msg)
 
   /** mediaTimescale/nSamples/sampleBytes come from mdhd/stts/stsz and
     * stay 0 when the track carries no sample tables (fragmented files,
@@ -440,11 +440,7 @@ object Isobmff {
       java.nio.charset.StandardCharsets.US_ASCII)
 
   def parseSafe(bytes: Array[Byte]): Either[String, Meta] =
-    try Right(parse(bytes))
-    catch {
-      case e: WarcError => Left(e.kind)
-      case _: Exception => Left("bad_frame")
-    }
+    Refusal.attempt(parse(bytes), "bad_frame")
 
   /** Sample/pixel decode is out of contract for every ISOBMFF codec —
     * typed, like [[Vp8]]'s inter-frame refusal.

@@ -33,9 +33,9 @@ import java.nio.charset.{Charset, StandardCharsets}
   */
 object Mail {
 
-  import Warc.WarcError
+  import graft.core.Refusal
 
-  private def bad(msg: String): Nothing = throw new WarcError("bad_mail", msg)
+  private def bad(msg: String): Nothing = throw new Refusal("bad_mail", msg)
 
   final case class MailPart(
       contentType: String,
@@ -69,17 +69,13 @@ object Mail {
   // ------------------------------------------------------------ parsing
 
   def parseSafe(bytes: Array[Byte]): Either[String, MailMessage] =
-    try Right(parse(bytes))
-    catch {
-      case e: WarcError => Left(e.kind)
-      case _: Exception => Left("bad_mail")
-    }
+    Refusal.attempt(parse(bytes), "bad_mail")
 
   def parse(bytes: Array[Byte]): MailMessage = parseEntity(bytes, 0)
 
   /** one RFC 5322 entity: header block + body, recursing into multipart. */
   private def parseEntity(bytes: Array[Byte], depth: Int): MailMessage = {
-    if (depth > 8) throw new WarcError("unsupported", "multipart nesting past 8")
+    if (depth > 8) throw new Refusal("unsupported", "multipart nesting past 8")
     val (rawHeaders, bodyStart) =
       // a part may legally have an EMPTY header block (defaults apply)
       if (bytes.nonEmpty && bytes(0) == '\n') (Vector.empty[(String, String)], 1)
@@ -109,7 +105,7 @@ object Mail {
         case "base64" => b64Strict(body)
         case "quoted-printable" => qpDecode(body)
         case "7bit" | "8bit" | "binary" => body
-        case other => throw new WarcError("unsupported", s"transfer encoding $other")
+        case other => throw new Refusal("unsupported", s"transfer encoding $other")
       }
       val filename = decodeWords(
         dparams.getOrElse("filename", params.getOrElse("name", "")))
@@ -319,8 +315,8 @@ object Mail {
       else if (c == '=') pad += 1
       else {
         val v = B64(c)
-        if (v < 0) throw new WarcError("bad_b64", f"base64 byte 0x$c%02x")
-        if (pad > 0) throw new WarcError("bad_b64", "base64 data after padding")
+        if (v < 0) throw new Refusal("bad_b64", f"base64 byte 0x$c%02x")
+        if (pad > 0) throw new Refusal("bad_b64", "base64 data after padding")
         acc = (acc << 6) | v
         nbits += 6
         nchars += 1
@@ -331,10 +327,10 @@ object Mail {
       }
       i += 1
     }
-    if (pad > 2) throw new WarcError("bad_b64", "base64 over-padding")
+    if (pad > 2) throw new Refusal("bad_b64", "base64 over-padding")
     if ((nchars + pad) % 4 != 0)
-      throw new WarcError("bad_b64", "base64 group length")
-    if (nchars % 4 == 1) throw new WarcError("bad_b64", "base64 dangling char")
+      throw new Refusal("bad_b64", "base64 group length")
+    if (nchars % 4 == 1) throw new Refusal("bad_b64", "base64 dangling char")
     out.toByteArray
   }
 
@@ -377,11 +373,7 @@ object Mail {
   // --------------------------------------------------------- mboxrd
 
   def mboxSplitSafe(bytes: Array[Byte]): Either[String, Vector[Array[Byte]]] =
-    try Right(mboxSplit(bytes))
-    catch {
-      case e: WarcError => Left(e.kind)
-      case _: Exception => Left("bad_mbox")
-    }
+    Refusal.attempt(mboxSplit(bytes), "bad_mbox")
 
   /** mboxrd: messages delimited by `From ` at line starts; body lines
     * matching `>+From ` lose one `>`. An empty file is zero messages; a
@@ -391,7 +383,7 @@ object Mail {
     if (bytes.isEmpty) return Vector.empty
     val text = new String(bytes, StandardCharsets.ISO_8859_1)
     if (!text.startsWith("From "))
-      throw new WarcError("bad_mbox", "mbox must open with a From separator")
+      throw new Refusal("bad_mbox", "mbox must open with a From separator")
     val out = Vector.newBuilder[Array[Byte]]
     val cur = new StringBuilder
     var first = true

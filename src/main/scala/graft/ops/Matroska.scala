@@ -21,9 +21,9 @@ package graft.ops
   */
 object Matroska {
 
-  import Warc.WarcError
+  import graft.core.Refusal
 
-  private def bad(msg: String): Nothing = throw new WarcError("bad_frame", msg)
+  private def bad(msg: String): Nothing = throw new Refusal("bad_frame", msg)
 
   // element ids (as stored, marker kept)
   private val IdEbml = 0x1A45DFA3L
@@ -77,11 +77,11 @@ object Matroska {
 
     /** VINT id: marker kept (1-4 bytes per Matroska MaxIDLength). */
     def readId(): Long = {
-      if (pos >= b.length) throw new WarcError("truncated", "id past end")
+      if (pos >= b.length) throw new Refusal("truncated", "id past end")
       val first = b(pos) & 0xff
       val len = java.lang.Integer.numberOfLeadingZeros(first) - 23
       if (first == 0 || len > 4) bad(f"invalid element id byte 0x$first%02x at $pos")
-      if (pos + len > b.length) throw new WarcError("truncated", "id past end")
+      if (pos + len > b.length) throw new Refusal("truncated", "id past end")
       var v = 0L
       var i = 0
       while (i < len) { v = (v << 8) | (b(pos + i) & 0xff); i += 1 }
@@ -93,11 +93,11 @@ object Matroska {
       * "unknown size" form.
       */
     def readSize(): Long = {
-      if (pos >= b.length) throw new WarcError("truncated", "size past end")
+      if (pos >= b.length) throw new Refusal("truncated", "size past end")
       val first = b(pos) & 0xff
       val len = java.lang.Integer.numberOfLeadingZeros(first) - 23
       if (first == 0 || len > 8) bad(f"invalid size byte 0x$first%02x at $pos")
-      if (pos + len > b.length) throw new WarcError("truncated", "size past end")
+      if (pos + len > b.length) throw new Refusal("truncated", "size past end")
       var v = (first & (0xff >>> len)).toLong
       var i = 1
       while (i < len) { v = (v << 8) | (b(pos + i) & 0xff); i += 1 }
@@ -148,7 +148,7 @@ object Matroska {
     if (bytes.length < 4 || (bytes(0) & 0xff) != 0x1a ||
         (bytes(1) & 0xff) != 0x45 || (bytes(2) & 0xff) != 0xdf ||
         (bytes(3) & 0xff) != 0xa3)
-      throw new WarcError("bad_magic", "no EBML header magic")
+      throw new Refusal("bad_magic", "no EBML header magic")
     val r = new Reader(bytes)
 
     var docType = ""
@@ -266,7 +266,7 @@ object Matroska {
     if (hid != IdEbml) bad(f"first element 0x$hid%x is not the EBML header")
     if (hsize < 0) bad("EBML header with unknown size")
     if (r.pos + hsize > bytes.length)
-      throw new WarcError("truncated", "EBML header size past end")
+      throw new Refusal("truncated", "EBML header size past end")
     children(r.pos + hsize, 1) { (id, size, _) =>
       id match {
         case IdDocType => docType = r.str(size.toInt)
@@ -275,17 +275,17 @@ object Matroska {
       }
     }
     if (docType != "matroska" && docType != "webm")
-      throw new WarcError("unsupported", s"EBML DocType '$docType'")
+      throw new Refusal("unsupported", s"EBML DocType '$docType'")
 
     // Segment (the single top-level payload; unknown size = to EOF)
     if (r.pos >= bytes.length)
-      throw new WarcError("truncated", "no Segment after the EBML header")
+      throw new Refusal("truncated", "no Segment after the EBML header")
     r.countElement()
     val sid = r.readId()
     val ssize = r.readSize()
     if (sid != IdSegment) bad(f"expected Segment, got 0x$sid%x")
     val segEnd = if (ssize < 0) -1L else r.pos + ssize
-    if (segEnd > bytes.length) throw new WarcError("truncated", "Segment size past end")
+    if (segEnd > bytes.length) throw new Refusal("truncated", "Segment size past end")
     children(segEnd, 1) { (id, size, d) =>
       id match {
         case IdInfo =>
@@ -331,11 +331,7 @@ object Matroska {
   }
 
   def parseSafe(bytes: Array[Byte]): Either[String, Meta] =
-    try Right(parse(bytes))
-    catch {
-      case e: WarcError => Left(e.kind)
-      case _: Exception => Left("bad_frame")
-    }
+    Refusal.attempt(parse(bytes), "bad_frame")
 
   // ------------------------------------------------------------- write --
 

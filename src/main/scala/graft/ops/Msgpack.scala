@@ -2,6 +2,7 @@ package graft.ops
 
 import java.nio.charset.StandardCharsets.UTF_8
 
+import graft.core.Refusal
 import graft.etl.{JArr, JBool, JFloat, JInt, JNull, JObj, JStr, JVal}
 
 /** MessagePack codec over the repo's JSON value model ([[graft.etl.JVal]])
@@ -27,10 +28,8 @@ import graft.etl.{JArr, JBool, JFloat, JInt, JNull, JObj, JStr, JVal}
   */
 object Msgpack {
 
-  final class MsgpackError(val kind: String, msg: String)
-      extends RuntimeException(s"$kind: $msg")
   private def fail(kind: String, msg: String): Nothing =
-    throw new MsgpackError(kind, msg)
+    throw new Refusal(kind, s"$kind: $msg")
 
   // ------------------------------------------------------------- write --
 
@@ -210,9 +209,5 @@ object Msgpack {
   }
 
   def decodeAllSafe(bytes: Array[Byte]): Either[String, Vector[JVal]] =
-    try Right(decodeAll(bytes))
-    catch {
-      case e: MsgpackError => Left(e.kind)
-      case _: Exception    => Left("bad_type")
-    }
+    Refusal.attempt(decodeAll(bytes), "bad_type")
 }

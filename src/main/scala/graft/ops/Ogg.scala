@@ -31,9 +31,9 @@ package graft.ops
   */
 object Ogg {
 
-  import Warc.WarcError
+  import graft.core.Refusal
 
-  private def bad(msg: String): Nothing = throw new WarcError("bad_frame", msg)
+  private def bad(msg: String): Nothing = throw new Refusal("bad_frame", msg)
 
   /** Ogg CRC-32: forward (MSB-first), poly 0x04C11DB7, init/xorout 0. */
   private val crcTable: Array[Int] = {
@@ -89,7 +89,7 @@ object Ogg {
   def pages(bytes: Array[Byte]): Vector[Page] = {
     if (bytes.length < 4 || bytes(0) != 'O' || bytes(1) != 'g' ||
         bytes(2) != 'g' || bytes(3) != 'S')
-      throw new WarcError("bad_magic", "no OggS capture pattern")
+      throw new Refusal("bad_magic", "no OggS capture pattern")
     def u32(p: Int): Long =
       (bytes(p) & 0xffL) | ((bytes(p + 1) & 0xffL) << 8) |
         ((bytes(p + 2) & 0xffL) << 16) | ((bytes(p + 3) & 0xffL) << 24)
@@ -98,7 +98,7 @@ object Ogg {
     var p = 0
     while (p < bytes.length) {
       if (p + 27 > bytes.length)
-        throw new WarcError("truncated", s"page header past end at $p")
+        throw new Refusal("truncated", s"page header past end at $p")
       if (!(bytes(p) == 'O' && bytes(p + 1) == 'g' && bytes(p + 2) == 'g' &&
           bytes(p + 3) == 'S')) bad(s"capture pattern missing at $p")
       if (bytes(p + 4) != 0) bad(s"ogg version ${bytes(p + 4)}")
@@ -109,13 +109,13 @@ object Ogg {
       val pageCrc = u32(p + 22)
       val nSegs = bytes(p + 26) & 0xff
       if (p + 27 + nSegs > bytes.length)
-        throw new WarcError("truncated", "lacing table past end")
+        throw new Refusal("truncated", "lacing table past end")
       var bodyLen = 0
       var i = 0
       while (i < nSegs) { bodyLen += bytes(p + 27 + i) & 0xff; i += 1 }
       val end = p + 27 + nSegs + bodyLen
       if (end > bytes.length)
-        throw new WarcError("truncated", "page body past end")
+        throw new Refusal("truncated", "page body past end")
       val computed = crc(bytes, p, end, zeroFrom = p + 22, zeroUntil = p + 26)
       if ((computed & 0xffffffffL) != pageCrc)
         bad(f"page CRC mismatch at $p (got $pageCrc%08x, computed ${computed & 0xffffffffL}%08x)")
@@ -242,11 +242,7 @@ object Ogg {
   }
 
   def parseSafe(bytes: Array[Byte]): Either[String, OggMeta] =
-    try Right(parse(bytes))
-    catch {
-      case e: WarcError => Left(e.kind)
-      case _: Exception => Left("bad_frame")
-    }
+    Refusal.attempt(parse(bytes), "bad_frame")
 
   // ------------------------------------------------------------- write --
 
@@ -361,7 +357,7 @@ object Ogg {
       if (family == 1 && channels > 8)
         bad(s"mapping family 1 with $channels channels")
       if (pkt.length < 21 + channels)
-        throw new WarcError("truncated", "OpusHead mapping table")
+        throw new Refusal("truncated", "OpusHead mapping table")
       val streams = pkt(19) & 0xff
       val coupled = pkt(20) & 0xff
       if (streams == 0) bad("zero streams")
@@ -439,7 +435,7 @@ object Ogg {
     var p = start
     def take(n: Long): Int = {
       if (n < 0 || p + n > pkt.length)
-        throw new WarcError("truncated", s"comment field of $n bytes past end")
+        throw new Refusal("truncated", s"comment field of $n bytes past end")
       val at = p; p += n.toInt; at
     }
     def str(n: Long): String = {
@@ -453,15 +449,15 @@ object Ogg {
           bad("invalid UTF-8 in comment string")
       }
     }
-    if (p + 4 > pkt.length) throw new WarcError("truncated", "vendor length")
+    if (p + 4 > pkt.length) throw new Refusal("truncated", "vendor length")
     val vendor = str(u32(take(4)))
-    if (p + 4 > pkt.length) throw new WarcError("truncated", "comment count")
+    if (p + 4 > pkt.length) throw new Refusal("truncated", "comment count")
     val n = u32(take(4))
     if (n > 10000) bad(s"comment count $n exceeds walk budget")
     val fields = Vector.newBuilder[(String, String)]
     var i = 0L
     while (i < n) {
-      if (p + 4 > pkt.length) throw new WarcError("truncated", "comment length")
+      if (p + 4 > pkt.length) throw new Refusal("truncated", "comment length")
       val s = str(u32(take(4)))
       val eq = s.indexOf('=')
       if (eq < 1) bad(s"comment without FIELD=value form: '$s'")
@@ -479,11 +475,7 @@ object Ogg {
   }
 
   def parseCommentsSafe(pkt: Array[Byte]): Either[String, Comments] =
-    try Right(parseComments(pkt))
-    catch {
-      case e: WarcError => Left(e.kind)
-      case _: Exception => Left("bad_frame")
-    }
+    Refusal.attempt(parseComments(pkt), "bad_frame")
 
   /** RFC 7845 §5.2 OpusTags comment packet (vendor + FIELD=value tags). */
   def opusTags(vendor: String,

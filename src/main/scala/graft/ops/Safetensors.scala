@@ -3,6 +3,7 @@ package graft.ops
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets.UTF_8
 
+import graft.core.Refusal
 import graft.etl.{JArr, JInt, JObj, JStr, JVal, Json}
 
 /** safetensors codec — the tensor-shipping container of the modern model
@@ -124,10 +125,8 @@ object Safetensors {
     }
   }
 
-  final class StError(val kind: String, msg: String)
-      extends RuntimeException(s"$kind: $msg")
   private def fail(kind: String, msg: String): Nothing =
-    throw new StError(kind, msg)
+    throw new Refusal(kind, s"$kind: $msg")
 
   // ------------------------------------------------------------- write --
 
@@ -287,9 +286,5 @@ object Safetensors {
 
   def readSafe(bytes: Array[Byte])
       : Either[String, (Vector[(String, Tensor)], Map[String, String])] =
-    try Right(read(bytes))
-    catch {
-      case e: StError   => Left(e.kind)
-      case _: Exception => Left("bad_header")
-    }
+    Refusal.attempt(read(bytes), "bad_header")
 }

@@ -27,11 +27,11 @@ import java.util.zip.CRC32
   */
 object SevenZip {
 
-  import Warc.WarcError
+  import graft.core.Refusal
 
-  private def bad(msg: String): Nothing = throw new WarcError("bad_7z", msg)
-  private def truncated(msg: String): Nothing = throw new WarcError("truncated", msg)
-  private def unsup(msg: String): Nothing = throw new WarcError("unsupported", msg)
+  private def bad(msg: String): Nothing = throw new Refusal("bad_7z", msg)
+  private def truncated(msg: String): Nothing = throw new Refusal("truncated", msg)
+  private def unsup(msg: String): Nothing = throw new Refusal("unsupported", msg)
 
   final case class SzMember(name: String, body: Array[Byte])
 
@@ -78,11 +78,7 @@ object SevenZip {
   // ================================================================ read
 
   def readSafe(bytes: Array[Byte]): Either[String, Seq[SzMember]] =
-    try Right(read(bytes))
-    catch {
-      case e: WarcError => Left(e.kind)
-      case _: Exception => Left("bad_7z")
-    }
+    Refusal.attempt(read(bytes), "bad_7z")
 
   /** Strict parse: walks the real header (or the LZMA-packed
     * kEncodedHeader), decodes every folder, verifies every declared
@@ -91,7 +87,7 @@ object SevenZip {
     */
   def read(bytes: Array[Byte]): Seq[SzMember] = {
     if (bytes.length < 32) truncated("7z shorter than the signature header")
-    if (!isSevenZip(bytes)) throw new WarcError("bad_magic", "not a 7z archive")
+    if (!isSevenZip(bytes)) throw new Refusal("bad_magic", "not a 7z archive")
     def u32(off: Int): Long = {
       var v = 0L; var i = 0
       while (i < 4) { v |= (bytes(off + i) & 0xffL) << (8 * i); i += 1 }
@@ -101,7 +97,7 @@ object SevenZip {
     val startCrc = new CRC32
     startCrc.update(bytes, 12, 20)
     if (startCrc.getValue != u32(8))
-      throw new WarcError("bad_crc", "signature-header CRC mismatch")
+      throw new Refusal("bad_crc", "signature-header CRC mismatch")
     val nhOff = u64(12)
     val nhSize = u64(20)
     if (nhSize == 0) {
@@ -115,7 +111,7 @@ object SevenZip {
     val nhCrc = new CRC32
     nhCrc.update(bytes, hdrStart, nhSize.toInt)
     if (nhCrc.getValue != u32(28))
-      throw new WarcError("bad_crc", "next-header CRC mismatch")
+      throw new Refusal("bad_crc", "next-header CRC mismatch")
 
     var in = new Reader(bytes, hdrStart, hdrStart + nhSize.toInt)
     var id = in.number()
@@ -128,7 +124,7 @@ object SevenZip {
       val hdr = decodeFolder(bytes, si, 0)
       si.folderCrc(0).foreach { want =>
         val c = new CRC32; c.update(hdr)
-        if (c.getValue != want) throw new WarcError("bad_crc", "encoded-header content CRC mismatch")
+        if (c.getValue != want) throw new Refusal("bad_crc", "encoded-header content CRC mismatch")
       }
       in = new Reader(hdr, 0, hdr.length)
       id = in.number()
@@ -159,7 +155,7 @@ object SevenZip {
         // budget BEFORE any decode: the declared total output is known
         val total = si.substreamSizes.foldLeft(0L)(_ + _)
         if (total > graft.core.Budget.maxInflatedBytes)
-          throw new WarcError("too_large",
+          throw new Refusal("too_large",
             s"archive declares $total unpacked bytes past the budget")
         val out = Vector.newBuilder[Array[Byte]]
         var sub = 0
@@ -179,7 +175,7 @@ object SevenZip {
               si.substreamCrcs(sub + j).foreach { want =>
                 val c = new CRC32; c.update(body)
                 if (c.getValue != want)
-                  throw new WarcError("bad_crc", s"substream CRC mismatch in folder $f")
+                  throw new Refusal("bad_crc", s"substream CRC mismatch in folder $f")
               }
               out += body
               off += len
@@ -541,16 +537,16 @@ object SevenZip {
     val folder = si.folders(f)
     if (folder.coders.exists(c => (c.id >>> 8) == 0x06F107L || (c.id >>> 16) == 0x06F1L ||
         (c.id >>> 24) == 0x06L))
-      throw new WarcError("encrypted", "AES-coded folder")
+      throw new Refusal("encrypted", "AES-coded folder")
     if (folder.coders.length != 1 || folder.coders.head.numIn != 1 ||
         folder.coders.head.numOut != 1)
       unsup(s"${folder.coders.length}-coder folder (filter chains)")
     val coder = folder.coders.head
     val declared = folder.unpackSize
     if (declared < 0 || declared > graft.core.Budget.maxInflatedBytes)
-      throw new WarcError("too_large", s"folder declares $declared bytes past the budget")
+      throw new Refusal("too_large", s"folder declares $declared bytes past the budget")
     if (declared > Int.MaxValue - 8)
-      throw new WarcError("too_large", "folder output > 2 GiB")
+      throw new Refusal("too_large", "folder output > 2 GiB")
 
     val packIdx = si.folderFirstPack(f)
     if (packIdx >= si.packSizes.length) bad("folder pack stream out of range")
@@ -624,7 +620,7 @@ object SevenZip {
 
     val nonEmpty = members.filter(_.body.nonEmpty)
     val solid = new Array[Byte](nonEmpty.foldLeft(0L)(_ + _.body.length.toLong) match {
-      case n if n > Int.MaxValue - 8 => throw new WarcError("too_large", "archive > 2 GiB solid block")
+      case n if n > Int.MaxValue - 8 => throw new Refusal("too_large", "archive > 2 GiB solid block")
       case n => n.toInt
     })
     var pos = 0

@@ -4,106 +4,70 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** File-level ingest for the record-shard containers (the [[WarcSource]] /
-  * [[TarSource]] shape for [[Avro]], [[TfRecord]] and compressed-JSONL
-  * [[Zstd]] shards): `binaryFile` maps whole shards to partitions — the
-  * shard, not the record, is the parallel unit — each file decodes in one
-  * stateless flatMap, and nothing shuffles unless the caller aggregates.
-  * That is the 100 TB scan shape for every format here.
+import graft.core.Refusal
+
+/** [[FileScan]] ingest for the record-shard containers: [[Avro]],
+  * [[TfRecord]] and compressed-JSONL [[Zstd]] shards.
   *
   * Document shards follow the engine's lead-column contract (the
   * [[graft.streaming.CorpusStreams.avroScan]] rule): an Avro schema must
   * lead with (long, string, string) = (id, lang, text); anything else is
-  * a typed `bad_schema` refusal in the safe twin, never a guess.
+  * a typed `bad_schema` refusal, never a guess.
   */
 object ShardSource {
 
-  /** One row per record across every Avro container under `path`. */
-  def avroDocs(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile").load(path)
-      .select("path", "content").as[(String, Array[Byte])]
-      .flatMap { case (file, bytes) =>
-        val (schema, recs) = Avro.read(bytes)
-        require(schema.fields.take(3).map(_._2) ==
-          Vector("long", "string", "string"),
-          s"shard $file does not lead with (id long, lang string, text string)")
-        recs.map(r => (file, r.values(0).asInstanceOf[Long],
-          r.values(1).asInstanceOf[String], r.values(2).asInstanceOf[String]))
-      }.toDF("file", "id", "lang", "text")
+  private def avroDocRows(file: String, bytes: Array[Byte]) = {
+    val (schema, recs) = Avro.read(bytes)
+    if (schema.fields.take(3).map(_._2) != Vector("long", "string", "string"))
+      throw new Refusal("bad_schema",
+        s"shard $file does not lead with (id long, lang string, text string)")
+    recs.map(r => (file, r.values(0).asInstanceOf[Long],
+      r.values(1).asInstanceOf[String], r.values(2).asInstanceOf[String]))
   }
 
+  /** One row per record across every Avro container under `path`. */
+  def avroDocs(spark: SparkSession, path: String): DataFrame =
+    FileScan(spark, path, "file", "id", "lang", "text")(avroDocRows)
+
   /** Fault-tolerant twin: one typed error row per rotten shard. */
-  def avroDocsSafe(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile").load(path)
-      .select("path", "content").as[(String, Array[Byte])]
-      .flatMap { case (file, bytes) =>
-        Avro.readSafe(bytes) match {
-          case Right((schema, recs))
-              if schema.fields.take(3).map(_._2) ==
-                Vector("long", "string", "string") =>
-            recs.map(r => (file, true, "", r.values(0).asInstanceOf[Long],
-              r.values(1).asInstanceOf[String], r.values(2).asInstanceOf[String]))
-          case Right(_) => Seq((file, false, "bad_schema", 0L, "", ""))
-          case Left(kind) => Seq((file, false, kind, 0L, "", ""))
-        }
-      }.toDF("file", "ok", "err_kind", "id", "lang", "text")
-  }
+  def avroDocsSafe(spark: SparkSession, path: String): DataFrame =
+    FileScan.safe(spark, path, "bad_record",
+      "file", "ok", "err_kind", "id", "lang", "text")(avroDocRows)(
+      { case (file, id, lang, text) => (file, true, "", id, lang, text) },
+      (file, kind) => (file, false, kind, 0L, "", ""))
+
+  private def tfRecordRows(file: String, bytes: Array[Byte]) =
+    TfRecord.read(bytes).zipWithIndex.map { case (p, i) => (file, i, p) }
 
   /** One row per record across every TFRecord shard under `path`:
     * payloads stay opaque bytes (real pipelines put tf.Example protos
     * there) with their in-shard ordinal.
     */
-  def tfRecords(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile").load(path)
-      .select("path", "content").as[(String, Array[Byte])]
-      .flatMap { case (file, bytes) =>
-        TfRecord.read(bytes).zipWithIndex.map { case (p, i) => (file, i, p) }
-      }.toDF("file", "idx", "payload")
-  }
+  def tfRecords(spark: SparkSession, path: String): DataFrame =
+    FileScan(spark, path, "file", "idx", "payload")(tfRecordRows)
 
   /** Fault-tolerant twin: one typed error row per rotten shard. */
-  def tfRecordsSafe(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile").load(path)
-      .select("path", "content").as[(String, Array[Byte])]
-      .flatMap { case (file, bytes) =>
-        TfRecord.readSafe(bytes) match {
-          case Right(recs) => recs.zipWithIndex.map { case (p, i) =>
-            (file, true, "", i, p)
-          }
-          case Left(kind) => Seq((file, false, kind, -1, Array.emptyByteArray))
-        }
-      }.toDF("file", "ok", "err_kind", "idx", "payload")
-  }
+  def tfRecordsSafe(spark: SparkSession, path: String): DataFrame =
+    FileScan.safe(spark, path, "truncated",
+      "file", "ok", "err_kind", "idx", "payload")(tfRecordRows)(
+      { case (file, i, p) => (file, true, "", i, p) },
+      (file, kind) => (file, false, kind, -1, Array.emptyByteArray))
 
-  /** One row per line across every compressed JSONL shard under `path`
-    * (codec sniffed by magic per file — the mixed directory case; `.br`
-    * routes by extension since brotli carries no magic).
+  /** The codec is sniffed by magic per file — the mixed directory case;
+    * `.br` routes by extension since brotli carries no magic.
     */
-  def jsonlLines(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile").load(path)
-      .select("path", "content").as[(String, Array[Byte])]
-      .flatMap { case (file, bytes) =>
-        new String(Zstd.decompressNamed(file, bytes), UTF_8)
-          .split('\n').iterator.zipWithIndex.map { case (l, i) => (file, i, l) }
-      }.toDF("file", "idx", "line")
-  }
+  private def jsonlRows(file: String, bytes: Array[Byte]) =
+    new String(Zstd.decompressNamed(file, bytes), UTF_8)
+      .split('\n').iterator.zipWithIndex.map { case (l, i) => (file, i, l) }
+
+  /** One row per line across every compressed JSONL shard under `path`. */
+  def jsonlLines(spark: SparkSession, path: String): DataFrame =
+    FileScan(spark, path, "file", "idx", "line")(jsonlRows)
 
   /** Fault-tolerant twin: one typed error row per rotten frame. */
-  def jsonlLinesSafe(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile").load(path)
-      .select("path", "content").as[(String, Array[Byte])]
-      .flatMap { case (file, bytes) =>
-        Zstd.decompressNamedSafe(file, bytes) match {
-          case Right(raw) => new String(raw, UTF_8).split('\n')
-            .iterator.zipWithIndex.map { case (l, i) => (file, true, "", i, l) }
-          case Left(kind) => Iterator((file, false, kind, -1, ""))
-        }
-      }.toDF("file", "ok", "err_kind", "idx", "line")
-  }
+  def jsonlLinesSafe(spark: SparkSession, path: String): DataFrame =
+    FileScan.safe(spark, path, "bad_frame",
+      "file", "ok", "err_kind", "idx", "line")(jsonlRows)(
+      { case (file, i, l) => (file, true, "", i, l) },
+      (file, kind) => (file, false, kind, -1, ""))
 }

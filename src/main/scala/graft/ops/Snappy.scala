@@ -22,9 +22,9 @@ package graft.ops
   */
 object Snappy {
 
-  import Warc.WarcError
+  import graft.core.Refusal
 
-  private def bad(msg: String): Nothing = throw new WarcError("bad_frame", msg)
+  private def bad(msg: String): Nothing = throw new Refusal("bad_frame", msg)
 
   private val StreamId: Array[Byte] =
     Array(0xff, 0x06, 0x00, 0x00, 's', 'N', 'a', 'P', 'p', 'Y').map(_.toByte)
@@ -126,8 +126,8 @@ object Snappy {
       more = (b & 0x80) != 0
     }
     if (declared > graft.core.Budget.maxInflatedBytes)
-      throw new WarcError("too_large", s"snappy block declares $declared bytes past the budget")
-    if (declared > Int.MaxValue - 8) throw new WarcError("too_large", "snappy block > 2 GiB")
+      throw new Refusal("too_large", s"snappy block declares $declared bytes past the budget")
+    if (declared > Int.MaxValue - 8) throw new Refusal("too_large", "snappy block > 2 GiB")
     val n = declared.toInt
     val out = new Array[Byte](n)
     var o = 0
@@ -209,15 +209,14 @@ object Snappy {
   }
 
   def decompressSafe(bytes: Array[Byte]): Either[String, Array[Byte]] =
-    try Right(decompress(bytes))
-    catch { case e: WarcError => Left(e.kind) }
+    Refusal.attempt(decompress(bytes))
 
   /** Strict framed decompress: stream id, chunk walk, CRC32C per data
     * chunk, reserved-unskippable refusal, padding/skippable skipped.
     */
   def decompress(bytes: Array[Byte]): Array[Byte] = {
     if (!isSnappyFramed(bytes))
-      throw new WarcError("bad_magic", "not a snappy framed stream")
+      throw new Refusal("bad_magic", "not a snappy framed stream")
     val cap = graft.core.Budget.maxInflatedBytes
     val out = new java.io.ByteArrayOutputStream(math.min(bytes.length.toLong * 3, 1 << 20).toInt)
     var p = StreamId.length
@@ -240,7 +239,7 @@ object Snappy {
           if (data.length > MaxChunk) bad("chunk exceeds 64 KiB uncompressed bound")
           if (maskedCrc(data, 0, data.length) != storedCrc) bad("chunk CRC32C mismatch")
           if (out.size().toLong + data.length > cap)
-            throw new WarcError("too_large", s"snappy inflates past $cap bytes")
+            throw new Refusal("too_large", s"snappy inflates past $cap bytes")
           out.write(data, 0, data.length)
         case 0xff => // stream identifier (restart / concatenation)
           if (len != 6 || !java.util.Arrays.equals(
@@ -250,7 +249,7 @@ object Snappy {
         case 0xfe => () // padding
         case t if t >= 0x80 => () // reserved skippable
         case t =>
-          throw new WarcError("unsupported", f"reserved unskippable chunk 0x$t%02x")
+          throw new Refusal("unsupported", f"reserved unskippable chunk 0x$t%02x")
       }
       p += len
     }

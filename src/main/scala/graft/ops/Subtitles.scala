@@ -25,9 +25,9 @@ package graft.ops
   */
 object Subtitles {
 
-  import Warc.WarcError
+  import graft.core.Refusal
 
-  private def bad(msg: String): Nothing = throw new WarcError("bad_cue", msg)
+  private def bad(msg: String): Nothing = throw new Refusal("bad_cue", msg)
 
   final case class Cue(startMs: Long, endMs: Long, text: String)
 
@@ -266,23 +266,11 @@ object Subtitles {
   }
 
   def parseAssSafe(text: String): Either[String, Cues] =
-    try Right(parseAss(text))
-    catch {
-      case e: WarcError => Left(e.kind)
-      case _: Exception => Left("bad_cue")
-    }
+    Refusal.attempt(parseAss(text), "bad_cue")
 
   def parseSrtSafe(text: String): Either[String, Cues] =
-    try Right(parseSrt(text))
-    catch {
-      case e: WarcError => Left(e.kind)
-      case _: Exception => Left("bad_cue")
-    }
+    Refusal.attempt(parseSrt(text), "bad_cue")
 
   def parseVttSafe(text: String): Either[String, Cues] =
-    try Right(parseVtt(text))
-    catch {
-      case e: WarcError => Left(e.kind)
-      case _: Exception => Left("bad_cue")
-    }
+    Refusal.attempt(parseVtt(text), "bad_cue")
 }

@@ -3,6 +3,8 @@ package graft.ops
 import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets.US_ASCII
 
+import graft.core.Refusal
+
 /** USTAR tar archives (POSIX.1-1988, public layout) — the container behind
   * WebDataset training shards: members named `{key}.{ext}`, consecutive
   * members sharing a key form one training sample, shards stream
@@ -18,8 +20,7 @@ object Tar {
 
   final case class TarEntry(name: String, body: Array[Byte])
 
-  final class TarError(val kind: String, msg: String) extends Exception(msg)
-  private def fail(kind: String, msg: String): Nothing = throw new TarError(kind, msg)
+  private def fail(kind: String, msg: String): Nothing = throw new Refusal(kind, msg)
 
   private val BlockSize = 512
 
@@ -219,11 +220,7 @@ object Tar {
 
   /** Fail-stop safe read: `Right(entries)` or `Left(errorKind)`. */
   def readSafe(bytes: Array[Byte]): Either[String, Seq[TarEntry]] =
-    try Right(read(bytes))
-    catch {
-      case e: TarError => Left(e.kind)
-      case _: Exception => Left("bad_header")
-    }
+    Refusal.attempt(read(bytes), "bad_header")
 
   private def isZeroBlock(b: Array[Byte], off: Int): Boolean = {
     var i = 0

@@ -2,6 +2,8 @@ package graft.ops
 
 import java.nio.charset.StandardCharsets.UTF_8
 
+import graft.core.Refusal
+
 /** tf.Example protobuf codec — the record format that actually lives
   * inside TFRecord training shards (tfr01 framed JSON to pin the
   * container; THIS is the payload real pipelines write): protobuf wire
@@ -31,10 +33,8 @@ object TfExample {
   /** one Example: ordered feature map */
   type Example = Vector[(String, FeatureVal)]
 
-  final class PbError(val kind: String, msg: String)
-      extends RuntimeException(s"$kind: $msg")
   private def fail(kind: String, msg: String): Nothing =
-    throw new PbError(kind, msg)
+    throw new Refusal(kind, s"$kind: $msg")
 
   // ------------------------------------------------------------- write --
 
@@ -222,9 +222,5 @@ object TfExample {
   }
 
   def decodeSafe(bytes: Array[Byte]): Either[String, Example] =
-    try Right(decode(bytes))
-    catch {
-      case e: PbError   => Left(e.kind)
-      case _: Exception => Left("bad_wire")
-    }
+    Refusal.attempt(decode(bytes), "bad_wire")
 }

@@ -3,6 +3,8 @@ package graft.ops
 import java.io.ByteArrayOutputStream
 import java.util.zip.CRC32C
 
+import graft.core.Refusal
+
 /** TFRecord shard container (the TensorFlow training-data format; framing
   * from the public TFRecord/riegeli docs): each record is
   *
@@ -51,7 +53,7 @@ object TfRecord {
     out.toByteArray
   }
 
-  /** Strict read: all records, or a typed [[Warc.WarcError]]. */
+  /** Strict read: all records, or a typed [[graft.core.Refusal]]. */
   def read(bytes: Array[Byte]): Vector[Array[Byte]] = {
     val out = Vector.newBuilder[Array[Byte]]
     var pos = 0
@@ -60,21 +62,21 @@ object TfRecord {
         ((bytes(off + 2) & 0xff) << 16) | ((bytes(off + 3) & 0xff) << 24)
     while (pos < bytes.length) {
       if (bytes.length - pos < 12)
-        throw new Warc.WarcError("truncated", "tfrecord header ends early")
+        throw new Refusal("truncated", "tfrecord header ends early")
       if (u32(pos + 8) != maskedCrc(bytes, pos, 8))
-        throw new Warc.WarcError("bad_length_crc", "length checksum mismatch")
+        throw new Refusal("bad_length_crc", "length checksum mismatch")
       var len = 0L
       var i = 7
       while (i >= 0) { len = (len << 8) | (bytes(pos + i) & 0xffL); i -= 1 }
       if (len > graft.core.Budget.maxInflatedBytes)
-        throw new Warc.WarcError("too_large",
+        throw new Refusal("too_large",
           s"tfrecord declares $len bytes past the budget")
       pos += 12
       if (len > bytes.length - pos - 4)
-        throw new Warc.WarcError("truncated", "tfrecord data ends early")
+        throw new Refusal("truncated", "tfrecord data ends early")
       val n = len.toInt
       if (u32(pos + n) != maskedCrc(bytes, pos, n))
-        throw new Warc.WarcError("bad_data_crc", "data checksum mismatch")
+        throw new Refusal("bad_data_crc", "data checksum mismatch")
       out += java.util.Arrays.copyOfRange(bytes, pos, pos + n)
       pos += n + 4
     }
@@ -83,9 +85,5 @@ object TfRecord {
 
   /** `Right(records)` or `Left(errorKind)` — the one-error-row contract. */
   def readSafe(bytes: Array[Byte]): Either[String, Vector[Array[Byte]]] =
-    try Right(read(bytes))
-    catch {
-      case e: Warc.WarcError => Left(e.kind)
-      case _: Exception => Left("truncated")
-    }
+    Refusal.attempt(read(bytes), "truncated")
 }

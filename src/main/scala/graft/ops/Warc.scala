@@ -4,6 +4,8 @@ import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets.{US_ASCII, UTF_8}
 import java.util.zip.{CRC32, Deflater, Inflater}
 
+import graft.core.Refusal
+
 /** WARC (Web ARChive, ISO 28500 / WARC 1.0) container support — the format
   * Common Crawl and every web-archive pipeline ships training text in.
   * Pure JVM, written from the public specifications: the WARC 1.0/1.1
@@ -41,9 +43,7 @@ object Warc {
       headers.collectFirst { case (k, v) if k.equalsIgnoreCase(name) => v }
   }
 
-  /** Typed refusal — `kind` is the stable aggregation vocabulary. */
-  final class WarcError(val kind: String, msg: String) extends Exception(msg)
-  private def fail(kind: String, msg: String): Nothing = throw new WarcError(kind, msg)
+  private def fail(kind: String, msg: String): Nothing = throw new Refusal(kind, msg)
 
   private val Crlf = "\r\n".getBytes(US_ASCII)
 
@@ -439,11 +439,7 @@ object Warc {
 
   def revisitRecordsSafe(bytes: Array[Byte])
       : Either[String, Seq[(String, String, String, String)]] =
-    try Right(revisitRecords(bytes))
-    catch {
-      case e: WarcError => Left(e.kind)
-      case _: Exception => Left("bad_frame")
-    }
+    Refusal.attempt(revisitRecords(bytes), "bad_frame")
 
   /** WET view: the `conversion` records as (targetUri, text). A record
     * claiming conversion without a target URI is malformed.
@@ -462,26 +458,14 @@ object Warc {
     }
 
   def wetRecordsSafe(bytes: Array[Byte]): Either[String, Seq[(String, String)]] =
-    try Right(wetRecords(bytes))
-    catch {
-      case e: WarcError => Left(e.kind)
-      case _: Exception => Left("bad_record")
-    }
+    Refusal.attempt(wetRecords(bytes), "bad_record")
 
   def watRecordsSafe(bytes: Array[Byte]): Either[String, Seq[(String, String)]] =
-    try Right(watRecords(bytes))
-    catch {
-      case e: WarcError => Left(e.kind)
-      case _: Exception => Left("bad_record")
-    }
+    Refusal.attempt(watRecords(bytes), "bad_record")
 
   /** Fail-stop safe read: `Right(records)` or `Left(errorKind)`. */
   def readSafe(bytes: Array[Byte]): Either[String, Seq[WarcRecord]] =
-    try Right(read(bytes))
-    catch {
-      case e: WarcError => Left(e.kind)
-      case _: Exception => Left("bad_record")
-    }
+    Refusal.attempt(read(bytes), "bad_record")
 
   /** Per-record safe HTTP parse: a structurally valid WARC can still carry
     * a malformed HTTP payload (unterminated header line, non-numeric
@@ -491,9 +475,5 @@ object Warc {
     * previously called [[parseHttpResponse]] raw inside the Right branch).
     */
   def parseHttpResponseSafe(body: Array[Byte]): Either[String, HttpResponse] =
-    try Right(parseHttpResponse(body))
-    catch {
-      case e: WarcError => Left(e.kind)
-      case _: Exception => Left("bad_record")
-    }
+    Refusal.attempt(parseHttpResponse(body), "bad_record")
 }

@@ -29,9 +29,9 @@ package graft.ops
   */
 object Xz {
 
-  import Warc.WarcError
+  import graft.core.Refusal
 
-  private def bad(msg: String): Nothing = throw new WarcError("bad_frame", msg)
+  private def bad(msg: String): Nothing = throw new Refusal("bad_frame", msg)
 
   private val Magic = Array(0xfd, '7', 'z', 'X', 'Z', 0x00).map(_.toByte)
   private val FooterMagic = Array[Byte]('Y', 'Z')
@@ -120,8 +120,7 @@ object Xz {
   }
 
   def decompressAloneSafe(bytes: Array[Byte]): Either[String, Array[Byte]] =
-    try Right(decompressAlone(bytes))
-    catch { case e: WarcError => Left(e.kind) }
+    Refusal.attempt(decompressAlone(bytes))
 
   /** Strict legacy `.lzma` decode: both the size-declared layout (no end
     * marker — what the reference encoder writes) and the unknown-size
@@ -137,7 +136,7 @@ object Xz {
     val lc = props % 9
     val lp = (props / 9) % 5
     val pb = props / 45
-    if (lc + lp > 4) throw new WarcError("unsupported", s"lc+lp > 4 (lc=$lc lp=$lp)")
+    if (lc + lp > 4) throw new Refusal("unsupported", s"lc+lp > 4 (lc=$lc lp=$lp)")
     var dictSize = 0L
     var i = 0
     while (i < 4) { dictSize |= (bytes(1 + i) & 0xffL) << (8 * i); i += 1 }
@@ -151,10 +150,10 @@ object Xz {
     if (declared != -1L) {
       // size-declared layout (-1 = unknown; any other negative is rot)
       if (declared < 0)
-        throw new WarcError("too_large", s"alone header declares $declared bytes")
+        throw new Refusal("too_large", s"alone header declares $declared bytes")
       if (declared > cap)
-        throw new WarcError("too_large", s"alone header declares $declared bytes past the budget")
-      if (declared > Int.MaxValue - 8) throw new WarcError("too_large", "alone stream > 2 GiB")
+        throw new Refusal("too_large", s"alone header declares $declared bytes past the budget")
+      if (declared > Int.MaxValue - 8) throw new Refusal("too_large", "alone stream > 2 GiB")
       val n = declared.toInt
       val out = new Array[Byte](n)
       val pos = dec.run(out, 0, n, n, 0, dictSize, allowMarker = true)
@@ -171,11 +170,11 @@ object Xz {
         pos = dec.run(buf, pos, soft, buf.length, 0, dictSize, allowMarker = true)
         if (!dec.sawMarker) {
           if (buf.length.toLong * 2 > cap + 280L)
-            throw new WarcError("too_large", s"alone stream inflates past $cap bytes")
+            throw new Refusal("too_large", s"alone stream inflates past $cap bytes")
           buf = java.util.Arrays.copyOf(buf, buf.length * 2)
         }
       }
-      if (pos > cap) throw new WarcError("too_large", s"alone stream inflates past $cap bytes")
+      if (pos > cap) throw new Refusal("too_large", s"alone stream inflates past $cap bytes")
       if (!dec.consumed) bad("alone stream has trailing garbage")
       java.util.Arrays.copyOf(buf, pos)
     }
@@ -184,15 +183,14 @@ object Xz {
   // ------------------------------------------------------------- decode
 
   def decompressSafe(bytes: Array[Byte]): Either[String, Array[Byte]] =
-    try Right(decompress(bytes))
-    catch { case e: WarcError => Left(e.kind) }
+    Refusal.attempt(decompress(bytes))
 
   /** Strict multi-stream decompress (concatenated streams with optional
     * 4-aligned zero padding between them, per the spec's §2 "Stream
     * concatenation").
     */
   def decompress(bytes: Array[Byte]): Array[Byte] = {
-    if (!isXz(bytes)) throw new WarcError("bad_magic", "not an xz stream")
+    if (!isXz(bytes)) throw new Refusal("bad_magic", "not an xz stream")
     val out = new java.io.ByteArrayOutputStream(math.min(bytes.length.toLong * 4, 1 << 20).toInt)
     var off = 0
     var first = true
@@ -272,7 +270,7 @@ object Xz {
         // produced; an end-marker stream looks exactly like that, so
         // retry size-unknown (marker-driven). Budget/props refusals
         // propagate — a second attempt cannot change them.
-        case e: WarcError if e.kind == "bad_frame" =>
+        case e: Refusal if e.kind == "bad_frame" =>
           decompressAlone(framed(-1L))
       }
     if (out.length.toLong != unpackSize)
@@ -336,7 +334,7 @@ object Xz {
       case 1 => 4
       case 4 => 8
       case 10 => 32
-      case _ => throw new WarcError("unsupported", s"check id $checkId")
+      case _ => throw new Refusal("unsupported", s"check id $checkId")
     }
 
     val cap = graft.core.Budget.maxInflatedBytes
@@ -382,20 +380,20 @@ object Xz {
         val declaredComp = if (hasCompSize) varint() else -1L
         val declaredUncomp = if (hasUncompSize) varint() else -1L
         if (declaredUncomp > cap)
-          throw new WarcError("too_large", s"block declares $declaredUncomp bytes past the budget")
+          throw new Refusal("too_large", s"block declares $declaredUncomp bytes past the budget")
         // filter chains: [LZMA2] or [delta, LZMA2] (the chain `xz
         // --delta` emits for binary dumps). Encoding order is delta →
         // LZMA2, so decode reverses: LZMA2 first, then delta
         // reconstruction. BCJ and longer chains refuse `unsupported`.
-        if (nFilters > 2) throw new WarcError("unsupported", s"$nFilters-filter chain")
+        if (nFilters > 2) throw new Refusal("unsupported", s"$nFilters-filter chain")
         var deltaDist = 0
         if (nFilters == 2) {
-          if (varint() != 0x03) throw new WarcError("unsupported", "non-delta first filter")
+          if (varint() != 0x03) throw new Refusal("unsupported", "non-delta first filter")
           if (varint() != 1) bad("delta props size")
           deltaDist = u8() + 1
         }
         val filterId = varint()
-        if (filterId != 0x21) throw new WarcError("unsupported", f"filter 0x$filterId%x")
+        if (filterId != 0x21) throw new Refusal("unsupported", f"filter 0x$filterId%x")
         if (varint() != 1) bad("LZMA2 props size")
         val dictProp = u8()
         if (dictProp > 40) bad(s"dict size prop $dictProp")
@@ -509,7 +507,7 @@ object Xz {
   // persistent LZMA probability state (persists unless state reset).
   // =================================================================
   private final class Lzma2BlockDecoder(dictSize: Long, budget: Long) {
-    if (budget < 0) throw new WarcError("too_large", "budget exhausted before block")
+    if (budget < 0) throw new Refusal("too_large", "budget exhausted before block")
 
     private var buf = new Array[Byte](4096)
     private var n = 0
@@ -519,7 +517,7 @@ object Xz {
 
     private def ensure(extra: Int): Unit = {
       if (n.toLong + extra > budget)
-        throw new WarcError("too_large", s"xz inflates past budget")
+        throw new Refusal("too_large", s"xz inflates past budget")
       if (n + extra > buf.length) {
         var cap = buf.length.toLong
         while (cap < n.toLong + extra) cap *= 2
@@ -564,7 +562,7 @@ object Xz {
       val lc = props % 9
       val lp = (props / 9) % 5
       val pb = props / 45
-      if (lc + lp > 4) throw new WarcError("unsupported", s"lc+lp > 4 (lc=$lc lp=$lp)")
+      if (lc + lp > 4) throw new Refusal("unsupported", s"lc+lp > 4 (lc=$lc lp=$lp)")
       new LzmaDecoder(lc, lp, pb)
     }
 

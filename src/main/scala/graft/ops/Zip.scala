@@ -3,6 +3,8 @@ package graft.ops
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import java.util.zip.{ZipEntry, ZipInputStream, ZipOutputStream}
 
+import graft.core.Refusal
+
 /** ZIP shard container (PKWARE APPNOTE / RFC 1951 deflate via the JDK):
   * the third shard format a training pipeline meets (gzip members →
   * WARC, USTAR → WebDataset, ZIP → document dumps / office containers).
@@ -109,9 +111,9 @@ object Zip {
       }
     } catch {
       case ex: java.util.zip.ZipException =>
-        throw new Warc.WarcError("bad_zip", ex.getMessage)
+        throw new Refusal("bad_zip", ex.getMessage)
       case _: java.io.EOFException =>
-        throw new Warc.WarcError("truncated", "zip stream ends early")
+        throw new Refusal("truncated", "zip stream ends early")
     } finally z.close()
     // ZipInputStream treats a corrupted local-header magic as clean EOF
     // (getNextEntry -> null), silently TRUNCATING the member list, and a
@@ -125,7 +127,7 @@ object Zip {
     val local = streamedNames.result()
     val central = centralNames(bytes)
     if (local.sorted != central.sorted)
-      throw new Warc.WarcError("bad_zip",
+      throw new Refusal("bad_zip",
         s"streamed ${local.length} entries ${local.take(4).mkString(",")}… " +
           s"disagree with the central directory's ${central.length}")
     out.result()
@@ -138,7 +140,7 @@ object Zip {
     * >4 GiB document dump ships.
     */
   private def centralNames(bytes: Array[Byte]): Seq[String] = {
-    def fail(msg: String): Nothing = throw new Warc.WarcError("bad_zip", msg)
+    def fail(msg: String): Nothing = throw new Refusal("bad_zip", msg)
     def u16(p: Int): Int = (bytes(p) & 0xff) | ((bytes(p + 1) & 0xff) << 8)
     def u32(p: Int): Long = (u16(p).toLong) | (u16(p + 2).toLong << 16)
     def u64(p: Int): Long = u32(p) | (u32(p + 4) << 32)
@@ -214,7 +216,7 @@ object Zip {
     while (n > 0) {
       out.write(buf, 0, n)
       if (out.size().toLong > cap)
-        throw new Warc.WarcError("too_large",
+        throw new Refusal("too_large",
           s"zip entry '$name' inflates past $cap bytes")
       n = z.read(buf)
     }
@@ -223,9 +225,5 @@ object Zip {
 
   /** Fail-stop safe read: `Right(members)` or `Left(errorKind)`. */
   def readSafe(bytes: Array[Byte]): Either[String, Seq[ZipMember]] =
-    try Right(read(bytes))
-    catch {
-      case e: Warc.WarcError => Left(e.kind)
-      case _: Exception => Left("bad_zip")
-    }
+    Refusal.attempt(read(bytes), "bad_zip")
 }

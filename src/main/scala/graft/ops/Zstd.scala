@@ -4,6 +4,8 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
 import com.github.luben.zstd.ZstdInputStream
 
+import graft.core.Refusal
+
 /** Zstandard / LZ4-frame shard compression (RFC 8878 / the LZ4 frame
   * format): the compression layer modern crawl corpora actually ship —
   * public web-text dumps distribute `.jsonl.zst` shards, and LZ4 frames
@@ -103,7 +105,7 @@ object Zstd {
   /** Strict decompress of a zstd frame with the inflate-bomb cap. */
   def decompress(bytes: Array[Byte]): Array[Byte] = {
     if (!isZstd(bytes))
-      throw new Warc.WarcError("bad_magic", "not a zstd frame")
+      throw new Refusal("bad_magic", "not a zstd frame")
     // fast path: frames that DECLARE their content size (all frames this
     // writer emits) decode via the one-shot API — no native streaming
     // context per frame. The declared size is attacker-controlled, so it
@@ -113,12 +115,12 @@ object Zstd {
     val declared = com.github.luben.zstd.Zstd.getFrameContentSize(bytes)
     if (declared >= 0L) {
       if (declared > graft.core.Budget.maxInflatedBytes)
-        throw new Warc.WarcError("too_large",
+        throw new Refusal("too_large",
           s"zstd frame declares $declared bytes past the budget")
       try com.github.luben.zstd.Zstd.decompress(bytes, declared.toInt)
       catch {
         case e: com.github.luben.zstd.ZstdException =>
-          throw new Warc.WarcError("bad_frame", s"corrupt zstd frame: ${e.getMessage}")
+          throw new Refusal("bad_frame", s"corrupt zstd frame: ${e.getMessage}")
       }
     } else
       drainCapped(new ZstdInputStream(new ByteArrayInputStream(bytes)), "zstd")
@@ -127,8 +129,8 @@ object Zstd {
   /** Strict decompress of an LZ4 frame with the inflate-bomb cap. */
   def decompressLz4(bytes: Array[Byte]): Array[Byte] = {
     if (!isLz4(bytes))
-      throw new Warc.WarcError("bad_magic", "not an lz4 frame")
-    def bad(msg: String) = throw new Warc.WarcError("bad_frame", msg)
+      throw new Refusal("bad_magic", "not an lz4 frame")
+    def bad(msg: String) = throw new Refusal("bad_frame", msg)
     val cap = graft.core.Budget.maxInflatedBytes
     var pos = 4
     def need(n: Int, what: String): Unit =
@@ -161,7 +163,7 @@ object Zstd {
       while (i >= 0) { declared = (declared << 8) | (bytes(pos + i) & 0xffL); i -= 1 }
       pos += 8
       if (declared < 0 || declared > cap)
-        throw new Warc.WarcError("too_large",
+        throw new Refusal("too_large",
           s"lz4 frame declares $declared bytes past the budget")
       declaredSize = declared
     }
@@ -188,7 +190,7 @@ object Zstd {
           out.write(dst, 0, n)
         }
         if (out.size().toLong > cap)
-          throw new Warc.WarcError("too_large", s"lz4 frame inflates past $cap bytes")
+          throw new Refusal("too_large", s"lz4 frame inflates past $cap bytes")
         // block checksum covers the block data AS STORED (spec: the
         // undecoded bytes), for raw and compressed blocks alike
         val blockCrc = xxh32(bytes, pos, len)
@@ -224,8 +226,8 @@ object Zstd {
     */
   def decompressGzip(bytes: Array[Byte]): Array[Byte] = {
     if (!isGzip(bytes))
-      throw new Warc.WarcError("bad_magic", "not a gzip member")
-    def bad(msg: String) = throw new Warc.WarcError("bad_frame", msg)
+      throw new Refusal("bad_magic", "not a gzip member")
+    def bad(msg: String) = throw new Refusal("bad_frame", msg)
     val cap = graft.core.Budget.maxInflatedBytes
     val out = new ByteArrayOutputStream(math.min(bytes.length.toLong * 3 + 64, 1 << 20).toInt)
     var pos = 0
@@ -275,7 +277,7 @@ object Zstd {
             crc.update(buf, 0, n); isize += n
             out.write(buf, 0, n)
             if (out.size().toLong > cap)
-              throw new Warc.WarcError("too_large", s"gzip inflates past $cap bytes")
+              throw new Refusal("too_large", s"gzip inflates past $cap bytes")
           } else if (!inf.finished() && (inf.needsInput() || inf.needsDictionary()))
             bad("gzip deflate stream ends early")
         }
@@ -310,17 +312,13 @@ object Zstd {
     if (isZstd(bytes)) decompress(bytes)
     else if (isLz4(bytes)) decompressLz4(bytes)
     else if (isGzip(bytes)) decompressGzip(bytes)
-    else throw new Warc.WarcError("bad_magic", "neither zstd, lz4, nor gzip")
+    else throw new Refusal("bad_magic", "neither zstd, lz4, nor gzip")
 
   /** `Right(bytes)` or `Left(errorKind)` — the one-error-row-per-shard
     * contract for fault-tolerant scans.
     */
   def decompressAnySafe(bytes: Array[Byte]): Either[String, Array[Byte]] =
-    try Right(decompressAny(bytes))
-    catch {
-      case e: Warc.WarcError => Left(e.kind)
-      case _: Exception => Left("bad_frame")
-    }
+    Refusal.attempt(decompressAny(bytes), "bad_frame")
 
   /** Full-matrix codec sniff (round 13): decompressAny's three native
     * codecs plus the hand-rolled bzip2, xz and snappy-framed readers —
@@ -337,11 +335,7 @@ object Zstd {
     else decompressAny(bytes)
 
   def decompressSniffSafe(bytes: Array[Byte]): Either[String, Array[Byte]] =
-    try Right(decompressSniff(bytes))
-    catch {
-      case e: Warc.WarcError => Left(e.kind)
-      case _: Exception => Left("bad_frame")
-    }
+    Refusal.attempt(decompressSniff(bytes), "bad_frame")
 
   /** Extension-aware sibling of [[decompressSniff]] for sources that know
     * the filename: brotli (RFC 7932) carries NO magic bytes, so `.br`
@@ -353,11 +347,7 @@ object Zstd {
     else decompressSniff(bytes)
 
   def decompressNamedSafe(file: String, bytes: Array[Byte]): Either[String, Array[Byte]] =
-    try Right(decompressNamed(file, bytes))
-    catch {
-      case e: Warc.WarcError => Left(e.kind)
-      case _: Exception => Left("bad_frame")
-    }
+    Refusal.attempt(decompressNamed(file, bytes), "bad_frame")
 
   private def drainCapped(in: java.io.InputStream, codec: String): Array[Byte] = {
     val cap = graft.core.Budget.maxInflatedBytes
@@ -368,14 +358,14 @@ object Zstd {
       while (n > 0) {
         out.write(buf, 0, n)
         if (out.size().toLong > cap)
-          throw new Warc.WarcError("too_large",
+          throw new Refusal("too_large",
             s"$codec frame inflates past $cap bytes")
         n = in.read(buf)
       }
     } catch {
-      case e: Warc.WarcError => throw e
+      case e: Refusal => throw e
       case e: java.io.IOException =>
-        throw new Warc.WarcError("bad_frame", s"corrupt $codec frame: ${e.getMessage}")
+        throw new Refusal("bad_frame", s"corrupt $codec frame: ${e.getMessage}")
     } finally in.close()
     out.toByteArray
   }

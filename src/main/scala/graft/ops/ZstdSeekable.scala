@@ -23,9 +23,9 @@ package graft.ops
   */
 object ZstdSeekable {
 
-  import Warc.WarcError
+  import graft.core.Refusal
 
-  private def bad(msg: String): Nothing = throw new WarcError("bad_frame", msg)
+  private def bad(msg: String): Nothing = throw new Refusal("bad_frame", msg)
 
   private val SkippableMagic = 0x184d2a5eL
   private val SeekableMagic = 0x8f92eab1L
@@ -105,7 +105,7 @@ object ZstdSeekable {
   def seekTable(bytes: Array[Byte]): SeekTable = {
     if (bytes.length < 17) bad("shorter than a seekable footer")
     if (le32(bytes, bytes.length - 4) != SeekableMagic)
-      throw new WarcError("bad_magic", "no seekable footer magic")
+      throw new Refusal("bad_magic", "no seekable footer magic")
     val descriptor = bytes(bytes.length - 5) & 0xff
     if ((descriptor & 0x7c) != 0) bad("reserved descriptor bits set")
     val hasChecksums = (descriptor & 0x80) != 0
@@ -143,7 +143,7 @@ object ZstdSeekable {
     if (totalComp != skipStart)
       bad(s"table claims $totalComp compressed bytes, file holds $skipStart")
     if (totalDecomp > graft.core.Budget.maxInflatedBytes)
-      throw new WarcError("too_large",
+      throw new Refusal("too_large",
         s"seekable archive declares $totalDecomp bytes past the budget")
     SeekTable(comp, decomp, sums)
   }
@@ -175,7 +175,7 @@ object ZstdSeekable {
         bad(s"frame $f inflates to ${frame.length}, table says ${table.decompressedSizes(f)}")
       table.checksums.foreach { ss =>
         if (xxh32of64(frame, 0, frame.length) != ss(f))
-          throw new WarcError("crc_mismatch", s"frame $f checksum mismatch")
+          throw new Refusal("crc_mismatch", s"frame $f checksum mismatch")
       }
       framesRead += 1
       val src = math.max(0L, offset - cum(f)).toInt
@@ -188,17 +188,9 @@ object ZstdSeekable {
   }
 
   def seekTableSafe(bytes: Array[Byte]): Either[String, SeekTable] =
-    try Right(seekTable(bytes))
-    catch {
-      case e: WarcError => Left(e.kind)
-      case _: Exception => Left("bad_frame")
-    }
+    Refusal.attempt(seekTable(bytes), "bad_frame")
 
   def readRangeSafe(bytes: Array[Byte], table: SeekTable, offset: Long,
       length: Int): Either[String, (Array[Byte], Int)] =
-    try Right(readRange(bytes, table, offset, length))
-    catch {
-      case e: WarcError => Left(e.kind)
-      case _: Exception => Left("bad_frame")
-    }
+    Refusal.attempt(readRange(bytes, table, offset, length), "bad_frame")
 }

@@ -46,12 +46,7 @@ object BrotliParity {
         // keep the refusal MESSAGE: an ok_trailing mutant must be refused
         // specifically by the trailing-garbage gate, not masked by some
         // earlier mis-parse (libbrotli proves the stream prefix is valid)
-        val ours: Either[String, Array[Byte]] =
-          try Right(graft.ops.Brotli.decompress(m))
-          catch {
-            case e: graft.ops.Warc.WarcError => Left(e.getMessage)
-            case e: Exception => Left(s"raw:${e.getClass.getSimpleName}")
-          }
+        val ours = CodecParity.ours(graft.ops.Brotli.decompress(m))
         (ours, verdict) match {
           case (Right(out), "ok") =>
             if (sha256(out) == f(4)) agreeOk += 1

@@ -1,5 +1,9 @@
 package graft.tools
 
+import scala.util.Try
+
+import graft.core.Refusal
+
 /** Differential mutant-parity check for the gzip / bzip2 / xz readers
   * against the verdicts recorded by tools/codec_mutant_parity.py (python
   * stdlib zlib / bz2 / lzma as the reference): for every single-byte XOR
@@ -13,32 +17,31 @@ package graft.tools
   */
 object CodecParity {
 
+  /** Our decoder's verdict in a parity replay: the output, the refusal's
+    * message (the gates are told apart by it), or `raw:<class>` for any
+    * other exception — a decoder bug, never an agreement.
+    */
+  private[tools] def ours(body: => Array[Byte]): Either[String, Array[Byte]] =
+    Try(body).toEither.left.map {
+      case e: Refusal => e.getMessage
+      case e => s"raw:${e.getClass.getSimpleName}"
+    }
+
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val codec = args(1)
     val decode: Array[Byte] => Either[String, Array[Byte]] = codec match {
       case "gzip" =>
-        b => try {
+        b => ours {
           val ms = graft.ops.Warc.gunzipMembers(b)
           val out = new java.io.ByteArrayOutputStream()
           ms.foreach(m => out.write(m, 0, m.length))
-          Right(out.toByteArray)
-        } catch {
-          case e: graft.ops.Warc.WarcError => Left(e.getMessage)
-          case e: Exception => Left(s"raw:${e.getClass.getSimpleName}")
+          out.toByteArray
         }
       case "bzip2" =>
-        b => try Right(graft.ops.Bzip2.decompress(b))
-        catch {
-          case e: graft.ops.Warc.WarcError => Left(e.getMessage)
-          case e: Exception => Left(s"raw:${e.getClass.getSimpleName}")
-        }
+        b => ours(graft.ops.Bzip2.decompress(b))
       case "xz" =>
-        b => try Right(graft.ops.Xz.decompress(b))
-        catch {
-          case e: graft.ops.Warc.WarcError => Left(e.getMessage)
-          case e: Exception => Left(s"raw:${e.getClass.getSimpleName}")
-        }
+        b => ours(graft.ops.Xz.decompress(b))
       case other => sys.error(s"unknown codec $other")
     }
 

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.core.Refusal
 import graft.ops.{ArrowIpc, Flac, FlacAudio, Msgpack, Npy, Safetensors, TfExample}
 import graft.ops.ArrowIpc.{ACol, AField, ALongCol, AStrCol}
 
@@ -122,8 +123,7 @@ object FuzzHunt {
         graft.ops.Zstd.compressGzip(p1) ++ graft.ops.Zstd.compressGzip(p2)
       },
       Set("bad_magic", "bad_frame", "too_large"),
-      b => try Right(graft.ops.Zstd.decompressGzip(b))
-        catch { case e: graft.ops.Warc.WarcError => Left(e.kind) })
+      b => Refusal.attempt(graft.ops.Zstd.decompressGzip(b)))
 
     total += hunt("bzip2",
       {
@@ -222,14 +222,12 @@ object FuzzHunt {
             Array.tabulate[Byte](16)(j => (j - 8).toByte),
             Array.tabulate[Byte](256)(i => (i % 64).toByte))))),
       Set("bad_magic", "bad_frame", "truncated", "too_large", "unsupported"),
-      b => try graft.ops.Gguf.readSafe(b).map { m =>
-        // force the dequant paths so payload mutations execute them
+      // force the dequant paths so payload mutations execute them; a
+      // mutated tensor NAME makes floats() miss — same typed family
+      b => Refusal.attempt({
+        val m = graft.ops.Gguf.read(b)
         m.floats("a"); m.floats("b"); m.floats("c")
-      } catch {
-        // a mutated tensor NAME makes floats() miss — same typed family
-        case e: graft.ops.Warc.WarcError => Left(e.kind)
-        case _: Exception => Left("bad_frame")
-      })
+      }, "bad_frame"))
 
     total += hunt("isobmff",
       // box framing, v0/v1 full boxes, largesize, stsd entries, HEIF item

@@ -60,18 +60,10 @@ object JvmCodecParity {
     } catch { case e: Exception => Left(e.getClass.getSimpleName) }
 
   private def oursSnappy(b: Array[Byte]): Either[String, Array[Byte]] =
-    try Right(graft.ops.Snappy.decompress(b))
-    catch {
-      case e: graft.ops.Warc.WarcError => Left(e.getMessage)
-      case e: Exception => Left(s"raw:${e.getClass.getSimpleName}")
-    }
+    CodecParity.ours(graft.ops.Snappy.decompress(b))
 
   private def oursLz4(b: Array[Byte]): Either[String, Array[Byte]] =
-    try Right(graft.ops.Zstd.decompressLz4(b))
-    catch {
-      case e: graft.ops.Warc.WarcError => Left(e.getMessage)
-      case e: Exception => Left(s"raw:${e.getClass.getSimpleName}")
-    }
+    CodecParity.ours(graft.ops.Zstd.decompressLz4(b))
 
   def main(args: Array[String]): Unit = {
     val which = args.headOption.getOrElse("snappy")

@@ -1,5 +1,7 @@
 package graft.tools
 
+import scala.util.Try
+
 /** Differential mutant-parity check for the USTAR and WAV readers against
   * python tarfile / wave verdicts (tools/tarwav_mutant_parity.py).
   *
@@ -39,8 +41,7 @@ object TarWavParity {
       case "tar" =>
         b => graft.ops.Tar.readSafe(b).map(canonTar)
       case "wav" =>
-        b => try Right(canonWav(b))
-        catch { case e: Exception => Left(e.getMessage) }
+        b => Try(canonWav(b)).toEither.left.map(_.getMessage)
       case o => sys.error(s"unknown $o")
     }
     val bases = scala.collection.mutable.Map[Int, Array[Byte]]()

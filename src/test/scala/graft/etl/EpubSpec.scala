@@ -56,7 +56,7 @@ class EpubSpec extends AnyFunSuite {
       .getBytes("UTF-8")
     // whatever the exact expansion shape, it must come back typed
     val r = try Right(EpubText.bodyText(bomb)) catch {
-      case e: graft.ops.Warc.WarcError => Left(e.kind)
+      case e: graft.core.Refusal => Left(e.kind)
       case _: Exception => Left("bad_epub")
     }
     assert(r.isLeft || r.toOption.exists(_.length < 1000))

@@ -51,4 +51,25 @@ class SchemaRegistrySpec extends AnyFunSuite {
       assert(e.getMessage.contains(entry.toString), e.getMessage)
     }
   }
+
+  test("a source id that is not a plain file-name stem is refused by name") {
+    val parent = Files.createTempDirectory("graft-registry")
+    val dir = Files.createDirectory(parent.resolve("reg"))
+    val reg = new SchemaRegistry(dir.toString)
+    for (id <- Seq("../x", "a/b", "", ".x", "a\u0000b")) {
+      val onSave = intercept[IllegalArgumentException](reg.save(id, schema("v1")))
+      assert(onSave.getMessage.contains(s"'$id'"), onSave.getMessage)
+      val onLoad = intercept[IllegalArgumentException](reg.load(id))
+      assert(onLoad.getMessage.contains(s"'$id'"), onLoad.getMessage)
+    }
+    assert(listing(parent) == Seq("reg"))
+    assert(listing(dir).isEmpty)
+    // the ids the pipeline, the tests and the benchmark use
+    for (id <- Seq("default_source", "src1", "orders")) {
+      reg.save(id, schema(id))
+      assert(reg.load(id).contains(schema(id)))
+    }
+    assert(listing(dir) ==
+      Seq("default_source_schema.json", "orders_schema.json", "src1_schema.json"))
+  }
 }

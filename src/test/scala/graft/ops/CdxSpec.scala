@@ -27,8 +27,8 @@ class CdxSpec extends AnyFunSuite {
     // IP-literal hosts are never reversed or www-stripped
     assert(Cdx.surt("http://192.168.0.1:8080/a") == "192.168.0.1:8080)/a")
     // bracketed IPv6 refuses typed (with or without a port)
-    intercept[Warc.WarcError](Cdx.surt("http://[::1]:8080/x"))
-    intercept[Warc.WarcError](Cdx.surt("http://[2001:db8::1]/x"))
+    intercept[graft.core.Refusal](Cdx.surt("http://[::1]:8080/x"))
+    intercept[graft.core.Refusal](Cdx.surt("http://[2001:db8::1]/x"))
   }
 
   test("CDXJ line round trip is exact") {
@@ -45,9 +45,9 @@ class CdxSpec extends AnyFunSuite {
     assert(Cdx.parseLineSafe("a)/x 2026 {}") == Left("bad_record"))
     assert(Cdx.parseLineSafe("a)/x 20260101123456 not-json") == Left("bad_record"))
     assert(Cdx.parseLineSafe("""a)/x 20260101123456 {"url":"u"}""") == Left("bad_record"))
-    val e = intercept[Warc.WarcError](Cdx.surt("ftp://example.com/x"))
+    val e = intercept[graft.core.Refusal](Cdx.surt("ftp://example.com/x"))
     assert(e.kind == "bad_record")
-    intercept[Warc.WarcError](Cdx.surt("not a url"))
+    intercept[graft.core.Refusal](Cdx.surt("not a url"))
   }
 
   test("every single-byte mutation of a valid line is typed, never a throw") {

@@ -85,7 +85,7 @@ class ExifSpec extends AnyFunSuite {
     for (pos <- clean.indices; x <- Seq(0x01, 0x5a, 0x80, 0xff)) {
       val m = clean.clone(); m(pos) = (m(pos) ^ x).toByte
       (Exif.parseSafe(m), try { Exif.scrub(m); None } catch {
-        case e: Warc.WarcError => Some(e.kind)
+        case e: graft.core.Refusal => Some(e.kind)
       }) match {
         case (Left(k), _) => assert(kinds.contains(k), s"parse pos=$pos x=$x kind=$k")
         case (_, Some(k)) => assert(kinds.contains(k), s"scrub pos=$pos x=$x kind=$k")

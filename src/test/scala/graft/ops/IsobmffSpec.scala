@@ -167,7 +167,7 @@ class IsobmffSpec extends AnyFunSuite {
   }
 
   test("sample decode refuses typed, like Vp8 inter-frame") {
-    val e = intercept[Warc.WarcError](Isobmff.decodeSamples(Array[Byte]()))
+    val e = intercept[graft.core.Refusal](Isobmff.decodeSamples(Array[Byte]()))
     assert(e.kind == "unsupported")
   }
 

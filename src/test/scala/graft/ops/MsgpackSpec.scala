@@ -72,7 +72,7 @@ class MsgpackSpec extends AnyFunSuite {
     finally graft.core.Budget.maxInflatedBytes = old
     // decode (single-value) refuses trailing bytes
     val t = try { Msgpack.decode(good ++ Array[Byte](0x01)); "no" }
-    catch { case e: Msgpack.MsgpackError => e.kind }
+    catch { case e: graft.core.Refusal => e.kind }
     assert(t == "trailing_garbage")
     // nesting bomb: 100 nested fixarray heads
     val nest = Array.fill[Byte](100)(0x91.toByte) ++ Array[Byte](0x01)

@@ -103,7 +103,7 @@ class OggSpec extends AnyFunSuite {
     // coupled > streams, truncated table
     def kind(b: Array[Byte]): String =
       try { Ogg.parseOpusHead(b); "ok" }
-      catch { case e: graft.ops.Warc.WarcError => e.kind }
+      catch { case e: graft.core.Refusal => e.kind }
     val f0bad = Ogg.opusHead(2, 0, 48000L); f0bad(9) = 3
     assert(kind(f0bad) == "bad_frame")
     assert(kind(Ogg.opusHeadMapped(9, 0, 48000L, 1, 5, 4,

@@ -139,7 +139,7 @@ class SnappySpec extends AnyFunSuite {
     // where reference snappy decoders refuse it
     val block = Array[Byte](0x00, 0xfc.toByte,
       0xff.toByte, 0xff.toByte, 0xff.toByte, 0xff.toByte)
-    val e = intercept[Warc.WarcError](Snappy.decompressBlock(block))
+    val e = intercept[graft.core.Refusal](Snappy.decompressBlock(block))
     assert(e.kind == "bad_frame")
   }
 }
