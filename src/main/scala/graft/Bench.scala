@@ -22,10 +22,10 @@ import org.apache.spark.sql.SparkSession
   * absolute threshold either fires on half the suite or misses real
   * bursts; the spin measures the instant the sample starts, after the
   * previous query finished, so only external contention inflates it).
-  * Any query whose best sample's spin exceeds ratio × suite-min (default
-  * 1.6, env SPARK_GRAFT_SPIN_RATIO) re-runs in a bounded third phase —
-  * wait (≤45 s per attempt, ≤300 s total) for the spin to return to
-  * base, sample again, up to twice. Queries whose final best sample is
+  * Any query whose best sample's spin exceeds `SpinRatio` (1.6) ×
+  * suite-min re-runs in a bounded third phase — wait (≤45 s per
+  * attempt, ≤300 s total) for the spin to return to base, sample
+  * again, up to twice. Queries whose final best sample is
   * still contended land in `noisy:[...]`, so the record adjudicates
   * itself without a judge re-run.
   *
@@ -33,6 +33,9 @@ import org.apache.spark.sql.SparkSession
   * pays JIT/codegen warm-up that a long-lived cluster never sees).
   */
 object Bench {
+  /** a sample whose pre-query spin exceeds this × the suite minimum is contended */
+  private val SpinRatio = 1.6
+
   private def loadAvg(): Double =
     try {
       val s = new String(java.nio.file.Files.readAllBytes(
@@ -42,20 +45,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default matches the pinned protocol (local[32], same as BenchOne) —
-    // the old "4" silently produced incomparable numbers when the env was
-    // unset (a round-11 session lost hours to exactly that)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.local.dir", graft.core.Scratch.localDir)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.local()
     // headline set only: queries flagged bench=false are layout BUILDS
     // (partitioned/bucketed table writes) — verified for correctness by the
     // driver gate, excluded from the steady-state query benchmark.
@@ -110,14 +100,12 @@ object Bench {
     val pass2 = onePass()
 
     // Gate: a pair where even the BEST sample started contended (spin >
-    // ratio × suite-min) is an inflated record, not a measurement — re-run
+    // SpinRatio × suite-min) is an inflated record, not a measurement — re-run
     // in a bounded third phase, waiting for the spin to come back to base
     // first. Queries whose final best sample is STILL contended land in
     // `noisy:[...]` so the record adjudicates itself without a judge re-run.
     val spinBase = (pass1 ++ pass2).map(_.spin).min
-    val ratio = sys.env.get("SPARK_GRAFT_SPIN_RATIO")
-      .flatMap(s => scala.util.Try(s.toDouble).toOption).getOrElse(1.6)
-    def contended(s: Sample): Boolean = s.spin > spinBase * ratio
+    def contended(s: Sample): Boolean = s.spin > spinBase * SpinRatio
     def bestOf(ss: Seq[Sample]): Sample = {
       val ok = ss.filter(_.sec >= 0)
       if (ok.isEmpty) ss.head else ok.minBy(_.sec)
@@ -131,7 +119,7 @@ object Bench {
       while (!clean && attempts < 2 && System.nanoTime() < retryDeadline) {
         // bounded decay wait for the external burst to pass
         var waited = 0
-        while (spinMs() > spinBase * ratio && waited < 45 &&
+        while (spinMs() > spinBase * SpinRatio && waited < 45 &&
           System.nanoTime() < retryDeadline) {
           Thread.sleep(5000); waited += 5
         }
@@ -163,31 +151,27 @@ object Bench {
     def r2d(v: Double): Double = math.rint(v * 100) / 100
     val qs = results.map { case (k, v, _) => "\"" + k + "\":" + r3(v) }
       .mkString("{", ",", "}")
+    // per-sample arrays of the durable record, one key per query
+    def perSample(f: Sample => Double): String = results.map { case (k, _, ss) =>
+      "\"" + k + "\":[" + ss.map(f).mkString(",") + "]"
+    }.mkString("{", ",", "}")
     // both raw runs per query — PAIRED ACROSS FULL PASSES, so a bursty
     // noise window cannot inflate both samples of the same query: a genuine
     // regression is slow in BOTH passes, noise shows a disagreeing pair
-    val runsJson = results.map { case (k, _, ss) =>
-      "\"" + k + "\":[" + ss.map(s => r3(s.sec)).mkString(",") + "]"
-    }.mkString("{", ",", "}")
+    val runsJson = perSample(s => r3(s.sec))
     // per-sample 1-min loadavg at query start: a sample taken under load
     // is adjudicable from the record alone (VERDICT r10 item 2)
-    val loadJson = results.map { case (k, _, ss) =>
-      "\"" + k + "\":[" + ss.map(s => r2d(s.load)).mkString(",") + "]"
-    }.mkString("{", ",", "}")
+    val loadJson = perSample(s => r2d(s.load))
     // per-sample start offset (sec since bench start) — locates each sample
     // on the wall clock so an external noise window can be lined up
-    val tJson = results.map { case (k, _, ss) =>
-      "\"" + k + "\":[" + ss.map(s => r2d(s.startOff)).mkString(",") + "]"
-    }.mkString("{", ",", "}")
+    val tJson = perSample(s => r2d(s.startOff))
+    // per-sample pre-query spin (ms): the contention sentinel behind the
+    // retry gate; compare to spin_base to adjudicate any sample
+    val spinJson = perSample(s => r2d(s.spin))
     val failed = results.count(_._2 < 0)
     val total = r3(results.map(_._2).filter(_ >= 0).sum)
     // "failed" makes crashes explicit: a query that starts erroring must not
     // read as a faster run (its -1 is excluded from the total).
-    // per-sample pre-query spin (ms): the contention sentinel behind the
-    // retry gate; compare to spin_base to adjudicate any sample
-    val spinJson = results.map { case (k, _, ss) =>
-      "\"" + k + "\":[" + ss.map(s => r2d(s.spin)).mkString(",") + "]"
-    }.mkString("{", ",", "}")
     val noisyJson = noisy.map("\"" + _ + "\"").mkString("[", ",", "]")
     // Round 18 (VERDICT r17 item 2): stdout gets a LEAN line — per-query
     // best seconds + the headline totals only. The full per-sample record
@@ -197,8 +181,8 @@ object Bench {
     // it twice (BENCH_r08, BENCH_r16 → `parsed: null`, no round-over-round
     // table). The lean line is ~10 KB and parses whole. Timing path,
     // protocol, and query set are UNCHANGED.
-    val line = s"""{"unit":"sec","queries":$qs,"spin_base":${r2d(spinBase)},"spin_ratio":$ratio,"protocol":"two-pass+retry","noisy":$noisyJson,"sf":"$sfDir","metric":"total","failed":$failed,"value":$total}"""
-    val fullLine = s"""{"unit":"sec","queries":$qs,"runs":$runsJson,"load":$loadJson,"t":$tJson,"spin":$spinJson,"spin_base":${r2d(spinBase)},"spin_ratio":$ratio,"protocol":"two-pass+retry","noisy":$noisyJson,"sf":"$sfDir","metric":"total","failed":$failed,"value":$total}"""
+    val line = s"""{"unit":"sec","queries":$qs,"spin_base":${r2d(spinBase)},"spin_ratio":$SpinRatio,"protocol":"two-pass+retry","noisy":$noisyJson,"sf":"$sfDir","metric":"total","failed":$failed,"value":$total}"""
+    val fullLine = s"""{"unit":"sec","queries":$qs,"runs":$runsJson,"load":$loadJson,"t":$tJson,"spin":$spinJson,"spin_base":${r2d(spinBase)},"spin_ratio":$SpinRatio,"protocol":"two-pass+retry","noisy":$noisyJson,"sf":"$sfDir","metric":"total","failed":$failed,"value":$total}"""
     println(line)
     // durable copy: the stdout capture truncated BENCH_r08.json's single
     // line to an unparseable tail, so the FULL JSON also lands in a file

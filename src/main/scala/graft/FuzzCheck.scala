@@ -12,29 +12,12 @@ import org.apache.spark.sql.functions.col
   */
 object FuzzCheck {
 
-  /** fixture → column → reference voted type we consciously deviate from
-    * (dateutil's permissive parses vs the fixed battery). Discovered
-    * mismatches print with a DEVIATION? marker to triage.
-    */
   def main(args: Array[String]): Unit = {
     val goldenPath = args.headOption.getOrElse("/tmp/fuzz_goldens.json")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    import spark.implicits._
+    val spark = graft.core.Session.local()
 
     val goldens = Json.parse(java.nio.file.Files.readString(
       java.nio.file.Paths.get(goldenPath))).asInstanceOf[JObj]
-
-    def cellOf(v: JVal): Option[String] = v match {
-      case JNull => None
-      case JObj(Vector(("__nan__", JBool(true)))) => None
-      case other => Some(Json.render(other))
-    }
 
     var fails = 0
     goldens.fields.foreach { case (name, g0) =>

@@ -27,6 +27,21 @@ object CodecParity {
       case e => s"raw:${e.getClass.getSimpleName}"
     }
 
+  /** One TSV row of the reference verdicts: base stream, byte position,
+    * XOR mask, whether the reference decoder accepted the mutant, and the
+    * SHA-256 of its output when it did.
+    */
+  private[tools] def row(line: String, lineNo: Int): (Int, Int, Int, Boolean, String) = {
+    val f = line.split('\t')
+    val refOk = f(3) match {
+      case "ok" => true
+      case "fail" => false
+      case v => throw new IllegalArgumentException(
+        s"line $lineNo: reference verdict '$v' is neither ok nor fail")
+    }
+    (f(0).toInt, f(1).toInt, f(2).toInt, refOk, f.lift(4).getOrElse(""))
+  }
+
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val codec = args(1)
@@ -66,26 +81,25 @@ object CodecParity {
 
     val src = scala.io.Source.fromFile(s"$dir/$codec.tsv")
     try {
-      for (line <- src.getLines() if line.nonEmpty) {
-        val f = line.split('\t')
-        val (i, pos, x, verdict) = (f(0).toInt, f(1).toInt, f(2).toInt, f(3))
+      for ((line, n) <- src.getLines().zipWithIndex if line.nonEmpty) {
+        val (i, pos, x, refOk, refSha) = row(line, n + 1)
         val m = base(i).clone()
         m(pos) = (m(pos) ^ x).toByte
         total += 1
-        (decode(m), verdict) match {
-          case (Right(out), "ok") =>
-            if (sha256(out) == f(4)) agreeOk += 1
+        (decode(m), refOk) match {
+          case (Right(out), true) =>
+            if (sha256(out) == refSha) agreeOk += 1
             else {
               hashMismatch += 1
               if (examples.size < 12) examples += s"HASH i=$i pos=$pos x=$x"
             }
-          case (Left(msg), "fail") =>
+          case (Left(msg), false) =>
             agreeFail += 1
             if (msg.startsWith("raw:")) {
               raw += 1
               if (examples.size < 12) examples += s"RAW($msg) i=$i pos=$pos x=$x"
             }
-          case (Left(msg), "ok")
+          case (Left(msg), true)
               if codec == "bzip2" && msg.contains("over-subscribed Huffman") =>
             // documented hardening divergence: bzip2 has no spec beyond its
             // implementation; libbz2 builds decode tables WITHOUT Kraft
@@ -94,15 +108,15 @@ object CodecParity {
             // code builder can emit an over-subscribed table, so refusing
             // up-front only rejects streams no sane encoder produces.
             policyStrict += 1
-          case (Left(k), "ok") =>
+          case (Left(k), true) =>
             weRefuse += 1
             if (examples.size < 12) examples += s"REFUSE($k) i=$i pos=$pos x=$x"
-          case (Right(out), _)
+          case (Right(out), false)
               if codec == "gzip" && java.util.Arrays.equals(out, m) =>
             // gunzipMembers returns non-gzip input whole BY DESIGN (dual
             // .warc/.warc.gz acceptance) — a magic-byte mutant lands here
             policyPlain += 1
-          case (Right(_), _) =>
+          case (Right(_), false) =>
             weAccept += 1
             if (examples.size < 12) examples += s"ACCEPT i=$i pos=$pos x=$x"
         }

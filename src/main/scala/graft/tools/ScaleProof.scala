@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale-proof harness (VERDICT r7 "Next round" #3): times the heavy query
   * family at the bench scale factor AND at a ×N scale-up built by
   * [[ScaleUp]], and reports the per-query wall-clock scaling factor. Done =
@@ -26,17 +24,7 @@ object ScaleProof {
     val big = args(1)
     val factor = args(2).toInt
     val names = if (args.length > 3) args(3).split(",").toSeq else defaultHeavy
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.local.dir", graft.core.Scratch.localDir)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.local()
 
     val byName = graft.queries.Registry.all.map(q => q.name -> q.run).toMap
     def warm(name: String, dir: String): Double = {

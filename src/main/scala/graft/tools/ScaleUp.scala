@@ -43,13 +43,7 @@ object ScaleUp {
   def main(args: Array[String]): Unit = {
     val Array(src, dst, nStr) = args.take(3)
     val n = nStr.toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.local()
     build(spark, src, dst, n)
     spark.stop()
   }
