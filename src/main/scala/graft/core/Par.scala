@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 
 /** Scale-adaptive shuffle widths (round 18, VERDICT r17 item 1).
   *
@@ -28,15 +29,11 @@ import org.apache.spark.sql.{Column, DataFrame}
   *   ~data/128 MB partitions regardless of driver core count, so the
   *   round-17 "32-partition shuffle of the corpus" failure mode is gone.
   *
-  * targetPartitionBytes is env-tunable (SPARK_GRAFT_TARGET_PARTITION_BYTES)
-  * with the guide §2.2 default of 128 MB; widthCap bounds insanity (a
-  * 2^20-task stage is beyond any single job this library plans).
+  * targetPartitionBytes is the guide §2.2 128 MB; widthCap bounds insanity
+  * (a 2^20-task stage is beyond any single job this library plans).
   */
 object Par {
-  val targetBytes: Long = sys.env.get("SPARK_GRAFT_TARGET_PARTITION_BYTES")
-    .flatMap(s => scala.util.Try(s.toLong).toOption)
-    .filter(_ > 0)
-    .getOrElse(128L << 20)
+  val targetBytes: Long = 128L << 20
 
   private val widthCap = BigInt(1) << 20
 
@@ -46,13 +43,20 @@ object Par {
   def width(df: DataFrame): Int = {
     val cores = df.sparkSession.sparkContext.defaultParallelism
     val byBytes =
-      try {
-        val leafSum = df.queryExecution.optimizedPlan.collectLeaves()
-          .map(_.stats.sizeInBytes).sum
-        (leafSum / targetBytes).min(widthCap).toInt
-      } catch { case _: Exception => 0 }
+      try (leafBytes(df) / targetBytes).min(widthCap).toInt
+      catch { case _: Exception => 0 }
     math.max(cores, byBytes)
   }
+
+  /** Σ leaf-plan bytes of `df`. A persisted input counts only once its
+    * cache is built: until then its relation reports the estimate of the
+    * plan it caches, which for a join is the no-CBO product of its children.
+    */
+  private[core] def leafBytes(df: DataFrame): BigInt =
+    df.queryExecution.optimizedPlan.collectLeaves().map {
+      case r: InMemoryRelation if !r.cacheBuilder.isCachedColumnBuffersLoaded => BigInt(0)
+      case leaf => leaf.stats.sizeInBytes
+    }.sum
 
   /** Round-robin spread of `df` over a data-size-derived width — the §2.5
     * "repartition immediately after the read" fix for single-row-group

@@ -1,5 +1,6 @@
 package graft.etl
 
+import java.time.LocalDate
 import java.util.regex.Pattern
 
 import org.apache.spark.sql.Column
@@ -82,8 +83,15 @@ object EtlUdfs {
   * ONE JSON parse and ONE `normalize_value` evaluation of a wide-table cell
   * yield everything both passes of [[DocumentEtl.normalizeData]] read —
   * the branch (a)/(b) output, the branch (c) output, the output's dtype tag,
-  * and the four branch-decision booleans. `doGenCode` emits a direct static
-  * call into [[EtlCellKernel]] (same shape as [[NormalizeValue]]).
+  * and the four branch-decision booleans.
+  *
+  * `doGenCode` calls [[EtlCellKernel]] through one [[CellMemo]] per
+  * generated class instance — one per task, shared by every `EtlCell`
+  * column of the projection — so the kernel runs once per distinct cell per
+  * task. That is exact: the kernel is a pure function of the cell string
+  * and the run date, it takes that date from the memo, and the memo drops
+  * every row computed with a date once that date has passed. The
+  * interpreted `eval` calls the kernel directly.
   */
 case class EtlCell(child: Expression) extends UnaryExpression {
 
@@ -96,10 +104,12 @@ case class EtlCell(child: Expression) extends UnaryExpression {
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val childGen = child.genCode(ctx)
+    ctx.addImmutableStateIfNotExists(classOf[CellMemo].getName, "etlCellMemo",
+      v => s"$v = graft.etl.CellMemo.etlCell();")
     ev.copy(
       code = code"""
         ${childGen.code}
-        InternalRow ${ev.value} = graft.etl.EtlCellKernel.eval(
+        InternalRow ${ev.value} = etlCellMemo.eval(
           ${childGen.isNull} ? null : ${childGen.value});
         boolean ${ev.isNull} = false;
       """,
@@ -152,15 +162,21 @@ object EtlCellKernel {
 
   private def u(s: String): UTF8String = if (s == null) null else UTF8String.fromString(s)
 
-  def eval(input: UTF8String): InternalRow = {
-    val cell = if (input == null) null else input.toString
+  def eval(input: UTF8String): InternalRow =
+    eval(if (input == null) null else input.toString, Dates.wallClock)
+
+  /** the kernel over the decoded cell, calling `today` for the run date
+    * only when the cell reaches the date parser (see
+    * [[Normalize.normalizeString]])
+    */
+  def eval(cell: String, today: () => LocalDate): InternalRow = {
     if (cell == null || cell == "null" || cell == "NaN")
       return InternalRow(null, EmptyCell, false, tagN, true, null, null, false)
     Json.parseOpt(cell) match {
       case None => InternalRow(null, EmptyCell, false, tagN, false, null, null, false)
       case Some(v) =>
         val s = PyRender.pyStr(v)
-        val out = Normalize.normalizeCell(v, s)
+        val out = Normalize.normalizeCell(v, s, today)
         val tag = out match {
           case JNull => tagN
           case _: JInt => tagI

@@ -72,19 +72,25 @@ object Normalize {
     * boolean True, int 95 → "95" → phone branch → digit STRING "95", bool
     * True → "True" → True again. Only None/NaN short-circuit.
     */
-  def normalizeCell(v: JVal): JVal = normalizeCell(v, PyRender.pyStr(v))
+  def normalizeCell(v: JVal): JVal = normalizeCell(v, PyRender.pyStr(v), Dates.wallClock)
 
   /** [[normalizeCell]] for a caller that already holds the cell's python
-    * `str()` rendering `s` (evaluated only for non-NA cells).
+    * `str()` rendering `s` (evaluated only for non-NA cells), taking the run
+    * date from `today` (see [[normalizeString]]).
     */
-  def normalizeCell(v: JVal, s: => String): JVal = v match {
+  def normalizeCell(v: JVal, s: => String, today: () => LocalDate): JVal = v match {
     case JNull => JNull
     case JFloat(d) if d.isNaN => JNull
-    case _ => normalizeString(s)
+    case _ => normalizeString(s, today)
   }
 
   /** The branch chain over an input string. */
-  def normalizeString(s0: String): JVal = {
+  def normalizeString(s0: String): JVal = normalizeString(s0, Dates.wallClock)
+
+  /** The branch chain, calling `today` for the run date only when the
+    * string reaches the date parser and passes its gate.
+    */
+  def normalizeString(s0: String, today: () => LocalDate): JVal = {
     val s = s0.strip()
     val sl = s.toLowerCase(Locale.ROOT)
     if (NullTokens.contains(sl)) JNull
@@ -104,7 +110,7 @@ object Normalize {
               pyFloat(sn) match {
                 case Some(d) => JFloat(d)
                 case None =>
-                  Dates.parseIso(s) match {
+                  Dates.parseIso(s, today) match {
                     case Some(iso) => JStr(iso)
                     case None => JStr(sl)
                   }
@@ -560,11 +566,19 @@ object Dates {
 
   /** Parse to `datetime.isoformat()`-style string, or None. The wall-clock
     * overload matches the reference (dateutil binds `datetime.now()`); the
-    * `today` overload exists for the pinned-run-date golden spec.
+    * `today` overloads take the run date from the caller (the pinned-run-date
+    * golden spec, [[CellMemo]]).
     */
-  def parseIso(s0: String): Option[String] =
-    // the gate needs no date: strings it rejects skip the clock read
-    if (!gateOk(s0)) None else parseIso(s0, java.time.LocalDate.now())
+  def parseIso(s0: String): Option[String] = parseIso(s0, wallClock)
+
+  /** [[parseIso]] taking the run date from `today`, which it calls only
+    * for strings the gate passes: the gate needs no date.
+    */
+  def parseIso(s0: String, today: () => LocalDate): Option[String] =
+    if (!gateOk(s0)) None else parseIso(s0, today())
+
+  /** the run date as dateutil reads it: `datetime.now()` */
+  val wallClock: () => LocalDate = () => LocalDate.now()
 
   // ---- round-8 tail: dateutil tokenizer-jump preprocessing. Each rewrite
   // mirrors a measured _timelex/jump rule (all probed against live

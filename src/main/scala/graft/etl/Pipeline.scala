@@ -212,11 +212,11 @@ object DocumentEtl {
 
   /** T5 — per-column normalization dispatch (reference:
     * backend/etl_pipeline.py:209-226). Two passes over ONE cached projection:
-    * pass 1: [[EtlCell]] parses each wide-table cell once and runs the
-    *   faithful normalize_value chain on it once; the projection of its
-    *   fields (raw cell, branch a/b output, branch c output, output tag,
-    *   NA / date-like / numeric / multi-list booleans — no `str(x)`
-    *   strings) is persisted through `Caches.persistLevel`, and ONE
+    * pass 1: [[EtlCell]] parses each distinct wide-table cell once per
+    *   task and runs the faithful normalize_value chain on it once; the
+    *   projection of its fields (raw cell, branch a/b output, branch c
+    *   output, output tag, NA / date-like / numeric / multi-list booleans —
+    *   no `str(x)` strings) is persisted through `Caches.persistLevel`, and ONE
     *   hash-aggregatable decision aggregate over it (min_by, every, max,
     *   sums — no struct buffers, so no SortAggregate) decides per column:
     *   the first non-NA value (in row order) is date-like, all non-NA

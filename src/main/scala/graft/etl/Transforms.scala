@@ -23,8 +23,6 @@ object Transforms {
   def enrich(df: DataFrame, rules: Seq[(String, String)]): DataFrame =
     rules.foldLeft(df) { case (d, (name, e)) => d.withColumn(name, expr(e)) }
 
-  final case class Violation(check: String, passed: Boolean, detail: Long)
-
   /** U4 — validations: required columns present; declared types match the
     * value-level `infer_type` battery (a column passes when every non-null
     * value infers to the declared tag). Returns a report DataFrame

@@ -116,8 +116,6 @@ object Bzip2 {
     def alignByte(): Unit = bitPos = (bitPos + 7) & ~7L
 
     def bytePos: Int = ((bitPos + 7) >> 3).toInt
-
-    def atEnd: Boolean = bitPos >= totalBits
   }
 
   private final class BitWriter {

@@ -58,9 +58,7 @@ object Gif {
     }
   }
 
-  final case class Anim(screenW: Int, screenH: Int, frames: Vector[Frame]) {
-    def totalDelayCs: Int = frames.iterator.map(_.delayCs).sum
-  }
+  final case class Anim(screenW: Int, screenH: Int, frames: Vector[Frame])
 
   private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
   private def le16(b: Array[Byte], i: Int): Int = u8(b, i) | (u8(b, i + 1) << 8)

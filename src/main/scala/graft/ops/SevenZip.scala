@@ -327,10 +327,6 @@ object SevenZip {
     /** AllAreDefined byte + optional bit vector (the kCRC prelude). */
     def definedBits(n: Int): Array[Boolean] =
       if (u8() != 0) Array.fill(n)(true) else bits(n)
-    def expectEnd(what: String): Unit = {
-      val id = number()
-      if (id != KEnd) bad(f"$what not terminated (id 0x$id%02x)")
-    }
   }
 
   private def readDigests(in: Reader, n: Int): Vector[Option[Long]] = {

@@ -85,9 +85,6 @@ object Sketches {
   // Count-min sketch: depth `d` hash rows (md5 slices), width `w` buckets.
   // Catalyst's subexpression elimination computes the shared md5 once per
   // row even though each bucket expression names it.
-  def cmBucket(key: Column, row: Int, width: Int): Column =
-    hashSlice(md5(concat(lit("cm:"), key.cast("string"))), row) % width
-
   def sqlCmBucket(key: String, row: Int, width: Int): String =
     s"${sqlHashSlice(s"md5(concat('cm:', CAST($key AS VARCHAR)))", row)} % $width"
 

@@ -32,7 +32,6 @@ object Vp8 {
 
   final case class Yuv(width: Int, height: Int,
       y: Array[Byte], u: Array[Byte], v: Array[Byte]) {
-    def yStride: Int = width
     def uvStride: Int = (width + 1) / 2
   }
 

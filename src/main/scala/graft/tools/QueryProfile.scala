@@ -39,11 +39,20 @@ object QueryProfile {
             f"in=${m.inputMetrics.bytesRead / 1024}%7d KiB  " +
             f"shR=${m.shuffleReadMetrics.totalBytesRead / 1024}%6d KiB  " +
             f"shW=${m.shuffleWriteMetrics.bytesWritten / 1024}%6d KiB  " +
-            s.name.takeWhile(_ != '\n').take(60)
+            label(s).take(80)
         } ++
         Seq(f"  stage-ms total: ${stages.map(ms).sum} (wall ${sec * 1000}%.0f ms; gap = scheduling/driver)") ++
         ops :+ s"  plan: $planFile"
     }
+  }
+
+  /** A stage named by the operators that built it: the distinct operation
+    * scopes of its RDDs, oldest first (`WholeStageCodegen (2) > Exchange`).
+    * Its call site says nothing for the stages AQE submits asynchronously.
+    */
+  def label(s: StageInfo): String = {
+    val scopes = s.rddInfos.sortBy(_.id).flatMap(_.scope.map(_.name)).distinct
+    if (scopes.isEmpty) s.name.takeWhile(_ != '\n') else scopes.mkString(" > ")
   }
 
   /** One profiled run of `query` on `sfDir`; the formatted plan is written

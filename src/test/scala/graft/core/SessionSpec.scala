@@ -47,6 +47,11 @@ class SessionSpec extends SparkSpec {
       assert(r.planFile == planFile)
       assert(Files.readString(planFile).contains("== Physical Plan =="))
       assert(r.lines.head.startsWith("== q01_pricing_summary: "))
+      // AQE submits most stages asynchronously: their call sites name a
+      // CompletableFuture, their operation scopes name the operators
+      val labels = r.stages.map(QueryProfile.label)
+      assert(labels.forall(!_.contains("withThreadLocalCaptured")), labels.mkString("\n"))
+      assert(labels.exists(_.contains("Exchange")), labels.mkString("\n"))
     } finally {
       Files.deleteIfExists(planFile)
       Files.delete(planDir)
