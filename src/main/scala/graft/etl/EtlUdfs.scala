@@ -81,17 +81,22 @@ object EtlUdfs {
 
 /** Faithful normalization's per-cell kernel as one Catalyst expression:
   * ONE JSON parse and ONE `normalize_value` evaluation of a wide-table cell
-  * yield everything both passes of [[DocumentEtl.normalizeData]] read —
+  * yield everything either pass of [[DocumentEtl.normalizeData]] reads —
   * the branch (a)/(b) output, the branch (c) output, the output's dtype tag,
-  * and the four branch-decision booleans.
+  * and the four branch-decision booleans. Each pass evaluates it once per
+  * cell; no cache holds its rows between the passes.
   *
   * `doGenCode` calls [[EtlCellKernel]] through one [[CellMemo]] per
   * generated class instance — one per task, shared by every `EtlCell`
   * column of the projection — so the kernel runs once per distinct cell per
   * task. That is exact: the kernel is a pure function of the cell string
   * and the run date, it takes that date from the memo, and the memo drops
-  * every row computed with a date once that date has passed. The
-  * interpreted `eval` calls the kernel directly.
+  * every row computed with a date once that date has passed. Only `norm`
+  * can depend on the date (a parsed date's text, or the lowercased string
+  * a failed parse falls back to), and with it `lower` and `lower_is_norm`,
+  * which compare against it. Both alternatives are strings, so the tag and
+  * the four decision booleans never depend on the date, and two passes on
+  * two dates still agree. The interpreted `eval` calls the kernel directly.
   */
 case class EtlCell(child: Expression) extends UnaryExpression {
 
@@ -126,7 +131,7 @@ object EtlCell {
     StructField("norm", StringType, nullable = true),
     // fillna('') + str(x).strip().lower() as a JSON cell (branch c) —
     // null when it equals `norm` (then `lower_is_norm`), which it does for
-    // most string and integer cells: the cache keeps one copy
+    // most string and integer cells: the row keeps one copy
     StructField("lower", StringType, nullable = true),
     StructField("lower_is_norm", BooleanType, nullable = false),
     // kind of `norm`: "i"/"f"/"b"/"s"/"n"(ull) — the post-normalize

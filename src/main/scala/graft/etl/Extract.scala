@@ -28,14 +28,39 @@ object Extract {
   /** One extracted record: ordered key → dynamic value. */
   type Record = Vector[(String, JVal)]
 
-  private val JsonObjRe = Pattern.compile("\\{[\\s\\S]+?\\}")
-  private val JsonArrRe = Pattern.compile("\\[[\\s\\S]+?\\]")
   private val CsvRe = Pattern.compile("((?:[\\w\" ]+,)+[\\w\" ]+\\n(?:[^\\n]*\\n?)+)")
   private val YamlRe = Pattern.compile("(?:[a-zA-Z0-9_]+:\\s[^\\n]+\\n(?:\\s+- .+\\n)*)+")
   private val CodeRe = Pattern.compile("(def .+?:\\n(?:\\s+.+\\n)*|print\\(.+\\))")
   private val LogRe = Pattern.compile("\\[\\d{4}-\\d{2}-\\d{2} .+?\\] .+")
 
-  def extractAll(text: String): Vector[Record] = {
+  /** The blocks each embedded-block extractor (E2–E5, E7, E8) finds in a
+    * document, in match order: the matches of the reference's
+    * `re.findall` patterns (E4 and E7 take group 1).
+    */
+  private[etl] final case class Blocks(objects: Vector[String], arrays: Vector[String],
+      csv: Vector[String], yaml: Vector[String], code: Vector[String], logs: Vector[String])
+
+  /** [[Blocks]] without the scans that cannot match. E2's `\{[\s\S]+?\}`
+    * and E3's `\[[\s\S]+?\]` are the [[bracketed]] `indexOf` walk. E4 and
+    * E5 need a `\n`, and E7 needs `def ` or `print(`; a document without it
+    * skips that regex, any other runs it unchanged.
+    */
+  private[etl] def blocks(text: String): Blocks = {
+    val lines = text.indexOf('\n') >= 0
+    Blocks(
+      bracketed(text, '{', '}'),
+      bracketed(text, '[', ']'),
+      if (lines) findAll(CsvRe, text, 1) else Vector.empty,
+      if (lines) findAll(YamlRe, text, 0) else Vector.empty,
+      if (text.contains("def ") || text.contains("print(")) findAll(CodeRe, text, 1)
+      else Vector.empty,
+      findAll(LogRe, text, 0))
+  }
+
+  def extractAll(text: String): Vector[Record] = records(text, blocks(text))
+
+  /** E1–E9 over a document and its embedded [[Blocks]]. */
+  private[etl] def records(text: String, found: Blocks): Vector[Record] = {
     val out = Vector.newBuilder[Record]
 
     // E1: strict JSON document (no _source_type tag)
@@ -45,7 +70,7 @@ object Extract {
       case _ =>
     }
     // E2: embedded JSON objects
-    findAll(JsonObjRe, text, 0).foreach { block =>
+    found.objects.foreach { block =>
       Json.parseOpt(block).foreach {
         case o: JObj => out += flattenDicts(o.fields :+ ("_source_type" -> JStr("json")))
         case JArr(items) =>
@@ -54,7 +79,7 @@ object Extract {
       }
     }
     // E3: embedded JSON arrays (only list results are taken)
-    findAll(JsonArrRe, text, 0).foreach { block =>
+    found.arrays.foreach { block =>
       Json.parseOpt(block).foreach {
         case JArr(items) =>
           items.foreach { case o: JObj => out += flattenDicts(o.fields :+ ("_source_type" -> JStr("json"))) case _ => }
@@ -62,13 +87,13 @@ object Extract {
       }
     }
     // E4: embedded CSV blocks
-    findAll(CsvRe, text, 1).foreach { block =>
+    found.csv.foreach { block =>
       Csv.parseBlock(block).foreach(_.foreach { rec =>
         out += (rec :+ ("_source_type" -> JStr("csv")))
       })
     }
     // E5: embedded YAML blocks (dict results only)
-    findAll(YamlRe, text, 0).foreach { block =>
+    found.yaml.foreach { block =>
       Yamls.parseOpt(block).foreach {
         case o: JObj => out += flattenDicts(o.fields :+ ("_source_type" -> JStr("yaml")))
         case _ =>
@@ -88,11 +113,11 @@ object Extract {
         "_source_type" -> JStr("html")) ++ attrs)
     }
     // E7: code blocks (newlines → spaces)
-    findAll(CodeRe, text, 1).foreach { code =>
+    found.code.foreach { code =>
       out += Vector("_code_block" -> JStr(code.replace("\n", " ")), "_source_type" -> JStr("code"))
     }
     // E8: log lines
-    findAll(LogRe, text, 0).foreach { log =>
+    found.logs.foreach { log =>
       out += Vector("_log_entry" -> JStr(log), "_source_type" -> JStr("log"))
     }
 
@@ -100,6 +125,23 @@ object Extract {
     if (res.isEmpty)
       Vector(Vector("_error" -> JStr("No extractable block found"), "_source_type" -> JStr("error")))
     else res
+  }
+
+  /** The matches of the lazy `open[\s\S]+?close` regex: from an `open` at
+    * `i` to the first `close` at `i + 2` or later (the lazy body takes at
+    * least one code point, and a close bracket never sits inside a
+    * surrogate pair), then on after that close.
+    */
+  private def bracketed(text: String, open: Char, close: Char): Vector[String] = {
+    val b = Vector.newBuilder[String]
+    var i = text.indexOf(open)
+    while (i >= 0) {
+      val j = text.indexOf(close, i + 2)
+      if (j < 0) return b.result()
+      b += text.substring(i, j + 1)
+      i = text.indexOf(open, j + 1)
+    }
+    b.result()
   }
 
   private def findAll(p: Pattern, text: String, group: Int): Vector[String] = {

@@ -10,17 +10,16 @@ import org.apache.spark.sql.functions._
   *     → extract (E1-E9 generator UDF + explode; per-doc, no shuffle)
   *     → pivot   (dynamic schema union: one tiny key-collect agg + a
   *                metadata-only wide projection — the json_normalize step)
-  *     → normalize (T5 two-pass: one kernel projection — one JSON parse
-  *                and one normalize_value per cell — is cached; one wide
-  *                hash aggregate over it decides each column's branch; one
-  *                projection of the cache applies it — no per-column jobs)
+  *     → normalize (T5 two-pass: one wide hash aggregate over the cell
+  *                kernel — one JSON parse and one normalize_value per cell —
+  *                decides each column's branch; one kernel projection
+  *                applies it — no per-column jobs)
   *     → profile  (Profile.generateSchema: single long-format shuffle)
   *     → registry diff + save, CSV/parquet sinks
   *
-  * Caches: the extraction `recs` (read by the pivot key scan and the
-  * kernel projection) is released as soon as the branch decision has
-  * materialized the per-cell cache; the per-cell cache is released once
-  * the profile has materialized the normalized table (registry mode) or by
+  * Caches: the extraction `recs` is read by the pivot key scan, the branch
+  * decision and the normalized table, so it stays cached until the profile
+  * has materialized the normalized table (registry mode) or until
   * graft.core.Caches.release at query end.
   *
   * The whole thing is lazy DataFrame DAG; only the pivot key-set and the
@@ -79,23 +78,19 @@ object DocumentEtl {
       now: Long = System.currentTimeMillis() / 1000,
       mode: Mode = Faithful): Result = {
 
-    // extraction is consumed by two downstream jobs (the pivot key scan,
-    // the per-cell kernel projection) — persist it, and
+    // extraction is consumed by three downstream jobs (the pivot key scan,
+    // the branch decision, the normalized table) — persist it, and
     // spread single-file inputs across cores first (CPU-bound UDF).
     val recs = extract(
       docs.transform(graft.core.Par.spread))
       .transform(graft.core.Caches.persistLevel(
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val (wide, cols) = pivot(spark, recs)
-    val (norm0, cells) =
+    val norm0 =
       if (mode == Sane)
-        (wide.select(col("doc_id") +: col("row_idx") +:
-          cols.map(c => normalizeCellSane(col(s"`$c`")).as(c)): _*), None)
-      else normalizeCached(wide, cols)
-    // faithful mode: the decision aggregate has materialized the per-cell
-    // cache and the table reads only that cache — `recs` has served its
-    // last consumer
-    if (cells.nonEmpty) recs.unpersist(blocking = false)
+        wide.select(col("doc_id") +: col("row_idx") +:
+          cols.map(c => normalizeCellSane(col(s"`$c`")).as(c)): _*)
+      else normalizeData(spark, wide, cols)
     val normalized = flattenLists(norm0, cols)
       .transform(graft.core.Caches.persistLevel(
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
@@ -104,12 +99,10 @@ object DocumentEtl {
         // registry mode is EAGER: the schema must be generated and saved
         // as a side effect of the run (and the diff reads the OLD entry
         // before the save). generateSchema's aggregates materialize
-        // `normalized` fully, so the per-cell cache (and, in sane mode,
-        // the extraction cache) has served its last consumer — free it
-        // after.
+        // `normalized` fully, so the extraction cache has served its last
+        // consumer — free it after.
         val schema = Profile.generateSchema(normalized, cols, now)
         recs.unpersist(blocking = false)
-        cells.foreach(_.unpersist(blocking = false))
         val reg = new SchemaRegistry(dir)
         val diff = reg.load(sourceId)
           .map(old => SchemaDiff.diff(old.toJson, schema.toJson))
@@ -120,9 +113,9 @@ object DocumentEtl {
         // reads `.schema` — consumers that only need the normalized table
         // (e.g. a downstream profile/stats job) skip a full profiling pass.
         // No eager normalized.count() either — the first consumer job
-        // materializes the cache; the per-cell cache (and `recs` in sane
-        // mode) stay registered in graft.core.Caches (persistLevel), so
-        // the harness releases them at query end.
+        // materializes the cache; `recs` stays registered in
+        // graft.core.Caches (persistLevel), so the harness releases it at
+        // query end.
         Result(normalized, cols,
           () => Profile.generateSchema(normalized, cols, now), () => None)
     }
@@ -211,32 +204,31 @@ object DocumentEtl {
   }
 
   /** T5 — per-column normalization dispatch (reference:
-    * backend/etl_pipeline.py:209-226). Two passes over ONE cached projection:
-    * pass 1: [[EtlCell]] parses each distinct wide-table cell once per
-    *   task and runs the faithful normalize_value chain on it once; the
-    *   projection of its fields (raw cell, branch a/b output, branch c
-    *   output, output tag, NA / date-like / numeric / multi-list booleans —
-    *   no `str(x)` strings) is persisted through `Caches.persistLevel`, and ONE
-    *   hash-aggregatable decision aggregate over it (min_by, every, max,
-    *   sums — no struct buffers, so no SortAggregate) decides per column:
-    *   the first non-NA value (in row order) is date-like, all non-NA
-    *   values look numeric, any multi-element list, and the output tags;
-    * pass 2: ONE projection of the cache picks the chosen field per column:
+    * backend/etl_pipeline.py:209-226). Two passes over ONE kernel
+    * projection ([[cellKernel]]), which [[EtlCell]] evaluates once per cell
+    * (once per distinct cell per task, through its memo):
+    * pass 1: ONE hash-aggregatable decision aggregate over the kernel's
+    *   decision fields (min_by, every, max, sums — no struct buffers, so no
+    *   SortAggregate) decides per column: the first non-NA value (in row
+    *   order) is date-like, all non-NA values look numeric, any
+    *   multi-element list, and the output tags;
+    * pass 2: the returned table, ONE projection of the kernel's outputs,
+    *   picks the chosen field per column:
     *   (a) date-like first value → faithful normalize_value chain,
     *   (b) all-numeric-ish      → faithful normalize_value chain,
     *   (c) otherwise            → fillna('') + strip + lowercase;
-    *   plus the float coercion of (a)/(b) outputs. The returned table reads
-    *   only the cache, which the decision aggregate has materialized, so
-    *   the caller may release `wide`'s inputs as soon as this returns.
+    *   plus the float coercion of (a)/(b) outputs.
+    * Nothing is cached between the passes: a cache of the kernel's rows
+    * costs more to build than the memo'd kernel costs to run twice. The
+    * table re-reads `wide`, so its inputs must stay available (cached)
+    * until the table has been materialized. The passes agree although they
+    * may run on different dates: the decision fields never depend on the
+    * run date (only a parsed date's text does, and a date and the string
+    * it fell back from are both strings), and each output cell is computed
+    * once, in pass 2.
     */
-  def normalizeData(spark: SparkSession, wide: DataFrame, cols: Seq[String]): DataFrame =
-    normalizeCached(wide, cols)._1
-
-  /** [[normalizeData]] plus the per-cell cache it reads (None when there
-    * are no columns and `wide` comes back as it is).
-    */
-  private def normalizeCached(wide: DataFrame, cols: Seq[String]): (DataFrame, Option[DataFrame]) = {
-    if (cols.isEmpty) return (wide, None)
+  def normalizeData(spark: SparkSession, wide: DataFrame, cols: Seq[String]): DataFrame = {
+    if (cols.isEmpty) return wide
     // NOTE on `is_numeric_dtype(x)` in the reference's gate
     // (backend/etl_pipeline.py:218): pandas 2.2's Series.map unboxes numpy
     // scalars to Python natives, and is_numeric_dtype(python int/float/bool)
@@ -245,8 +237,7 @@ object DocumentEtl {
     // "-5"). It only fires for STRING cells that happen to name a numpy
     // dtype ("int64", "short", ...) — EtlCellKernel's dtype-name clause.
     // Negative-number and bool-column behavior is pinned by the fuzz corpus.
-    val cells = cellKernel(wide, cols).transform(graft.core.Caches.persistLevel(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val cells = cellKernel(wide, cols)
     val row = branchDecision(cells, cols.size).collect()(0)
 
     val projected = cols.zipWithIndex.map { case (c, i) =>
@@ -272,14 +263,14 @@ object DocumentEtl {
         case _ => when(col(s"lower_is_norm_$i"), norm).otherwise(col(s"lower_$i")).as(c)
       }
     }
-    (cells.select(col("doc_id") +: col("row_idx") +: projected: _*), Some(cells))
+    cells.select(col("doc_id") +: col("row_idx") +: projected: _*)
   }
 
-  /** Pass 1's projection: per column `raw_i` plus the [[EtlCell]] fields as
-    * flat columns `<field>_i`. The kernel struct is bound in its own
-    * projection and only then split: the struct is referenced once per
-    * field, so Catalyst keeps the two projections apart and evaluates the
-    * kernel once per cell.
+  /** The kernel projection both passes read: per column `raw_i` plus the
+    * [[EtlCell]] fields as flat columns `<field>_i`. The kernel struct is
+    * bound in its own projection and only then split: the struct is
+    * referenced once per field, so Catalyst keeps the two projections apart
+    * and evaluates the kernel once per cell.
     */
   private[graft] def cellKernel(wide: DataFrame, cols: Seq[String]): DataFrame =
     wide.select(col("doc_id") +: col("row_idx") +:

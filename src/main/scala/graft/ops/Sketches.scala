@@ -134,17 +134,10 @@ object Sketches {
   def srpWeights(nBits: Int, dim: Int): Array[Array[Long]] =
     Array.tabulate(nBits, dim)((b, i) => srpWeight(b, i))
 
-  /** dot of a double-array column against a literal integer hyperplane. */
-  def dotLit(v: Column, w: Array[Long]): Column =
-    aggregate(
-      zip_with(v, array(w.map(x => lit(x.toDouble)): _*), (a, b) => a * b),
-      lit(0.0), (acc, x) => acc + x)
-
-  /** 16-bit SRP signature column for a double-array vector column. */
-  def srpSignature(v: Column, weights: Array[Array[Long]]): Column =
-    weights.zipWithIndex.map { case (w, b) =>
-      when(dotLit(v, w) >= 0, lit(1 << b)).otherwise(lit(0))
-    }.reduce(_ + _)
+  /** SRP signature column for a double-array vector column: bit b set when
+    * ⟨v, weights(b)⟩ ≥ 0 ([[SrpSig]]).
+    */
+  def srpSignature(v: Column, weights: Array[Array[Long]]): Column = SrpSig(v, weights)
 
   /** DuckDB mirror: the hyperplane rebuilt via md5 inside SQL, the dot via
     * list_dot_product (verified bit-identical to the Spark fold).

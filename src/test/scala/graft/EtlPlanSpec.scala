@@ -4,18 +4,19 @@ import java.util.Locale
 
 import graft.etl._
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.catalyst.expressions.{Expression, PosExplode}
+import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, SortAggregateExec}
-import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
 
 /** Plan gates for the document ETL's normalize path, on the golden
   * fixtures: the two decision aggregates (pivot key scan, normalize branch
   * decision) stay hash aggregates, the normalize kernel runs once per cell
-  * and only below the per-cell cache, and the precompiled regexes of
-  * `Normalize.pyFloat` / `Normalize.inferType` decide exactly as the
-  * per-call `String.matches` forms they replaced.
+  * in the branch decision and in the table with no cache of its rows, the
+  * pipeline's table reads the extraction from its cache, and the
+  * precompiled regexes of `Normalize.pyFloat` / `Normalize.inferType`
+  * decide exactly as the per-call `String.matches` forms they replaced.
   */
 class EtlPlanSpec extends SparkSpec {
 
@@ -46,8 +47,6 @@ class EtlPlanSpec extends SparkSpec {
     case other => other +: other.children.flatMap(nodes)
   }
 
-  private def kernels(e: Expression): Int = e.collect { case k: EtlCell => k }.size
-
   test("decision aggregates (pivot key scan, normalize branch decision) plan no SortAggregate") {
     val withCols = inputs.map(pivoted).filter(_._3.nonEmpty)
     assert(withCols.size > 50)
@@ -63,21 +62,50 @@ class EtlPlanSpec extends SparkSpec {
     }
   }
 
-  test("normalizeData's table runs the kernel once per cell, only below its cache") {
+  /** the kernels of a plan, with the children they evaluate */
+  private def kernelsOf(p: SparkPlan): Seq[Expression] =
+    nodes(p).flatMap(_.expressions.flatMap(_.collect { case k: EtlCell => k.child }))
+
+  test("normalizeData runs the kernel once per cell in each pass, caching no kernel rows") {
     for (input <- inputs.take(8)) {
       val (_, wide, cols) = pivoted(input)
       if (cols.nonEmpty) {
         val table = DocumentEtl.normalizeData(spark, wide, cols)
-        val plan = table.queryExecution.withCachedData
-        // InMemoryRelation is a leaf: this walk stays above the cache
-        assert(plan.collect { case n => n.expressions.map(kernels).sum }.sum == 0, plan.toString)
-        val below = plan.collect { case r: InMemoryRelation =>
-          nodes(r.cacheBuilder.cachedPlan).map(_.expressions.map(kernels).sum).sum
+        val decision = DocumentEtl.branchDecision(DocumentEtl.cellKernel(wide, cols), cols.size)
+        // the table passes a column through raw, with no kernel, when it
+        // has no non-NA value or is a skipped list column
+        val d = decision.collect()(0)
+        def flag(name: String, i: Int) = Option(d.getAs[java.lang.Boolean](s"${name}_$i"))
+        val raw = cols.indices.count { i =>
+          flag("first", i).isEmpty || (flag("first", i).contains(false) &&
+            !flag("allnum", i).contains(true) && flag("haslist", i).contains(true))
         }
-        assert(below.sum == cols.size, plan.toString)
+        for ((df, n) <- Seq(table -> (cols.size - raw), decision -> cols.size)) {
+          val cached = df.queryExecution.withCachedData.collect { case r: InMemoryRelation => r }
+          assert(cached.forall(r => kernelsOf(r.cacheBuilder.cachedPlan).isEmpty), cached)
+          // one kernel per column, each over its own column's cell
+          val kernels = kernelsOf(df.queryExecution.sparkPlan)
+          assert(kernels.size == n && kernels.distinct.size == n, df.queryExecution.sparkPlan.toString)
+        }
       }
     }
     graft.core.Caches.release()
+  }
+
+  test("the pipeline's table reads the extraction through its cache, and extracts no second time") {
+    import spark.implicits._
+    val docs = inputs.take(8).zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    try {
+      val table = DocumentEtl.run(spark, docs).table
+      // the table is persisted: its cached plan is the normalized table's
+      val Seq(own) = table.queryExecution.withCachedData.collect { case r: InMemoryRelation => r }
+      val plan = nodes(own.cacheBuilder.cachedPlan)
+      assert(plan.collect { case g: GenerateExec => g }.isEmpty, plan.head.toString)
+      val scans = plan.collect { case s: InMemoryTableScanExec => s }
+      assert(scans.size == 1, plan.head.toString)
+      assert(nodes(scans.head.relation.cacheBuilder.cachedPlan)
+        .exists { case g: GenerateExec => g.generator.isInstanceOf[PosExplode] case _ => false })
+    } finally graft.core.Caches.release()
   }
 
   /** the forms the precompiled patterns replaced, verbatim */

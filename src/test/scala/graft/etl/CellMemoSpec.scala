@@ -2,6 +2,7 @@ package graft.etl
 
 import java.nio.charset.StandardCharsets.UTF_8
 import java.time.{LocalDate, LocalDateTime, ZoneId}
+import java.util.TimeZone
 
 import scala.util.Random
 
@@ -15,7 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * kernel returns: on every golden, date-parity and adversarial input, for
   * a key whose bytes are overwritten after it was stored, across a local
   * midnight, and end to end through `normalizeData` with and without
-  * generated code.
+  * generated code and with a run date that changes between its passes.
   */
 class CellMemoSpec extends SparkSpec {
 
@@ -211,5 +212,37 @@ class CellMemoSpec extends SparkSpec {
       sources.head)
     assert("etlCellMemo = graft.etl.CellMemo.etlCell\\(\\);".r.findAllIn(sources.head).size == 1)
     assert("etlCellMemo\\.eval\\(".r.findAllIn(sources.head).size == cols.size)
+  }
+
+  test("a run date that changes between normalizeData's passes: the decision holds, every output cell takes the table's date") {
+    // the decision fields (tag, na, date_like, numeric, multi_list) never
+    // depend on the run date
+    val dates = Seq(LocalDate.of(2024, 2, 29), LocalDate.of(2023, 3, 1),
+      LocalDate.of(1999, 12, 31), LocalDate.of(2000, 1, 1), LocalDate.of(2076, 6, 15))
+    def decision(cell: String, d: LocalDate): Seq[Any] =
+      row(EtlCellKernel.eval(cell, () => d)).drop(EtlCell.fields.indexOf("tag"))
+    val dependent = jsonCells.filter(c => dates.map(decision(c, _)).distinct.size > 1)
+    assert(dependent.isEmpty, dependent.take(20).mkString("\n"))
+
+    // the local dates in these zones, 26 hours apart, always differ: moving
+    // the JVM's zone between the passes moves the run date past at least
+    // one midnight (this document's outputs differ only across a new year)
+    import spark.implicits._
+    val (west, east) = ("Etc/GMT+12", "Pacific/Kiritimati")
+    assert(LocalDate.now(ZoneId.of(west)) != LocalDate.now(ZoneId.of(east)))
+    val doc = Seq("2024-01-05 10:00:00", "Jan 2024", "10:30", "5 Jan", "03/04/05")
+      .map(d => s"""{"when": "$d", "st": "O", "n": 1}""").mkString("[", ", ", "]")
+    def table(decideIn: String, outputIn: String): Seq[String] = {
+      val zone = TimeZone.getDefault
+      try {
+        TimeZone.setDefault(TimeZone.getTimeZone(decideIn))
+        val (wide, cols) = DocumentEtl.pivot(spark,
+          DocumentEtl.extract(Seq((0L, doc)).toDF("doc_id", "text")))
+        val t = DocumentEtl.normalizeData(spark, wide, cols)
+        TimeZone.setDefault(TimeZone.getTimeZone(outputIn))
+        t.orderBy(col("row_idx")).collect().map(_.mkString("\u0001")).toSeq
+      } finally TimeZone.setDefault(zone)
+    }
+    assert(table(west, east) == table(east, east))
   }
 }

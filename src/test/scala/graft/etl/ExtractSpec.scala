@@ -1,5 +1,9 @@
 package graft.etl
 
+import java.util.regex.Pattern
+
+import scala.util.Random
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Unit specs for the block extractors (E1-E9) — pure-Scala, no Spark.
@@ -85,5 +89,59 @@ class ExtractSpec extends AnyFunSuite {
     val recs = Extract.extractAll("""{"a": {"b": {"c": 1}}, "l": [1, 2]}""")
     assert(recs.head.toMap.keySet == Set("a.b.c", "l"))
     assert(recs.head.toMap.apply("l") == JArr(Vector(JInt(1), JInt(2))))
+  }
+
+  /** The reference's `re.findall` patterns for E2–E5, E7 and E8, verbatim:
+    * `Extract.blocks` must find exactly what they find.
+    */
+  private val JsonObjRe = Pattern.compile("\\{[\\s\\S]+?\\}")
+  private val JsonArrRe = Pattern.compile("\\[[\\s\\S]+?\\]")
+  private val CsvRe = Pattern.compile("((?:[\\w\" ]+,)+[\\w\" ]+\\n(?:[^\\n]*\\n?)+)")
+  private val YamlRe = Pattern.compile("(?:[a-zA-Z0-9_]+:\\s[^\\n]+\\n(?:\\s+- .+\\n)*)+")
+  private val CodeRe = Pattern.compile("(def .+?:\\n(?:\\s+.+\\n)*|print\\(.+\\))")
+  private val LogRe = Pattern.compile("\\[\\d{4}-\\d{2}-\\d{2} .+?\\] .+")
+
+  private def findAll(p: Pattern, text: String, group: Int): Vector[String] = {
+    val m = p.matcher(text)
+    val b = Vector.newBuilder[String]
+    while (m.find()) b += m.group(group)
+    b.result()
+  }
+
+  private def regexBlocks(text: String): Extract.Blocks = Extract.Blocks(
+    findAll(JsonObjRe, text, 0), findAll(JsonArrRe, text, 0), findAll(CsvRe, text, 1),
+    findAll(YamlRe, text, 0), findAll(CodeRe, text, 1), findAll(LogRe, text, 0))
+
+  private def goldenInputs: Seq[String] =
+    Seq("/goldens/pipeline_goldens.json", "/goldens/fuzz_goldens.json").flatMap { p =>
+      val in = getClass.getResourceAsStream(p)
+      Json.parse(new String(in.readAllBytes(), "UTF-8")).asInstanceOf[JObj].fields.map {
+        case (_, g) => g.asInstanceOf[JObj].fields.toMap.apply("input").asInstanceOf[JStr].s
+      }
+    }
+
+  /** seeded documents over the characters the scans and their guards
+    * look at, surrogate pairs and lone surrogates included
+    */
+  private def generated(n: Int, seed: Long): Seq[String] = {
+    val tokens = Vector("{", "}", "[", "]", "\n", ",", ":", "\"", " ", "a", "k", "Z", "_", "0",
+      "7", "def ", "print(", ")", "- ", "\uD83D\uDE00", "\uD83D", "\uDE00", "\r",
+      "[2024-01-05 10:00:00] ", "{\"a\": 1}", "yes: no\n")
+    val rnd = new Random(seed)
+    Seq.fill(n)(Seq.fill(rnd.nextInt(64))(tokens(rnd.nextInt(tokens.size))).mkString)
+  }
+
+  test("extractAll ≡ its regex form, record for record, on goldens and generated documents") {
+    val docs = goldenInputs ++ generated(3000, 8)
+    assert(docs.size > 3000)
+    val blockDiffs = docs.filter(t => Extract.blocks(t) != regexBlocks(t))
+    assert(blockDiffs.isEmpty, blockDiffs.take(5).map(PyRender.pyReprStr).mkString("\n"))
+    val recordDiffs = docs.filter(t => Extract.extractAll(t) != Extract.records(t, regexBlocks(t)))
+    assert(recordDiffs.isEmpty, recordDiffs.take(5).map(PyRender.pyReprStr).mkString("\n"))
+    // the generator reaches every scan, and the guards' skipped cases
+    Seq[Extract.Blocks => Vector[String]](_.objects, _.arrays, _.csv, _.yaml, _.code, _.logs)
+      .foreach(scan => assert(docs.exists(t => scan(regexBlocks(t)).nonEmpty)))
+    assert(docs.exists(t => !t.contains("\n") && t.contains("{")))
+    assert(docs.exists(t => !t.contains("def ") && !t.contains("print(") && t.contains("\n")))
   }
 }
