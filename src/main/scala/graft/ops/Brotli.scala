@@ -27,7 +27,7 @@ package graft.ops
   * against reference-library streams at qualities 1/5/9/11 and window
   * sizes 10..24 in BrotliSpec.
   *
-  * Contract matches [[Bzip2]]/[[Xz]]: strict capped reader (output
+  * Contract matches [[Zstd]]/[[Xz]]: strict capped reader (output
   * bounded by [[graft.core.Budget.maxInflatedBytes]] BEFORE allocation
   * growth), typed fail-stop refusals (`bad_frame` / `too_large`) the safe
   * scans turn into one error row per rotten shard, and trailing-garbage
@@ -140,8 +140,7 @@ object Brotli {
 
   private final class BitReader(b: Array[Byte]) {
     // bit position in Long: a shard >= 256 MiB has > 2^31 bits, and an
-    // Int position would wrap past the bounds guard (the Bzip2 reader
-    // made the same choice for the same reason)
+    // Int position would wrap past the bounds guard
     private var pos = 0L
     private val nbits = b.length.toLong * 8
 

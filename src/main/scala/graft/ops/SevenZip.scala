@@ -9,9 +9,10 @@ import java.util.zip.CRC32
   * (variable-length REAL_UINT64 numbers, bit vectors, the property-id
   * tree: PackInfo / UnpackInfo / SubStreamsInfo / FilesInfo, plus the
   * kEncodedHeader indirection real archives use), composed with the
-  * existing from-scratch LZMA cores: LZMA2 chunks via
-  * [[Xz.decodeLzma2Raw]], raw LZMA1 via [[Xz.decodeLzma1Raw]], bzip2
-  * via [[Bzip2]], raw deflate via the JDK, plus stored (Copy) folders.
+  * library codecs behind [[Xz]] and [[Bzip2]]: LZMA2 chunks via
+  * [[Xz.decodeLzma2Raw]] and raw LZMA1 via [[Xz.decodeLzma1Raw]] (both
+  * xz-java), bzip2 via commons-compress, raw deflate via the JDK, plus
+  * stored (Copy) folders.
   *
   * Same family contract as [[Tar]]/[[Zip]]: deterministic writer
   * (solid LZMA1 folder, no timestamps), strict reader that verifies

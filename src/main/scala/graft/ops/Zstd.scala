@@ -123,7 +123,7 @@ object Zstd {
           throw new Refusal("bad_frame", s"corrupt zstd frame: ${e.getMessage}")
       }
     } else
-      drainCapped(new ZstdInputStream(new ByteArrayInputStream(bytes)), "zstd")
+      graft.core.Budget.drain(new ZstdInputStream(new ByteArrayInputStream(bytes)), "zstd")
   }
 
   /** Strict decompress of an LZ4 frame with the inflate-bomb cap. */
@@ -320,8 +320,9 @@ object Zstd {
   def decompressAnySafe(bytes: Array[Byte]): Either[String, Array[Byte]] =
     Refusal.attempt(decompressAny(bytes), "bad_frame")
 
-  /** Full-matrix codec sniff (round 13): decompressAny's three native
-    * codecs plus the hand-rolled bzip2, xz and snappy-framed readers —
+  /** Full-matrix codec sniff (round 13): decompressAny's three codecs
+    * plus the bzip2 (commons-compress), xz (our container walk over
+    * xz-java) and hand-rolled snappy-framed readers —
     * every magic-bearing compression container the corpus layer decodes
     * (legacy `.lzma` has NO magic and stays an explicit
     * [[Xz.decompressAlone]] call). The file-level JSONL source and the
@@ -348,25 +349,4 @@ object Zstd {
 
   def decompressNamedSafe(file: String, bytes: Array[Byte]): Either[String, Array[Byte]] =
     Refusal.attempt(decompressNamed(file, bytes), "bad_frame")
-
-  private def drainCapped(in: java.io.InputStream, codec: String): Array[Byte] = {
-    val cap = graft.core.Budget.maxInflatedBytes
-    val out = new ByteArrayOutputStream(4096)
-    val buf = new Array[Byte](8192)
-    try {
-      var n = in.read(buf)
-      while (n > 0) {
-        out.write(buf, 0, n)
-        if (out.size().toLong > cap)
-          throw new Refusal("too_large",
-            s"$codec frame inflates past $cap bytes")
-        n = in.read(buf)
-      }
-    } catch {
-      case e: Refusal => throw e
-      case e: java.io.IOException =>
-        throw new Refusal("bad_frame", s"corrupt $codec frame: ${e.getMessage}")
-    } finally in.close()
-    out.toByteArray
-  }
 }

@@ -134,10 +134,9 @@ object CompressedShardQueries {
     // ------------------------------------------------------------------
     // xz shard round trip: the tukaani reference encoder writes (rotating
     // preset and integrity-check type — CRC32 / CRC64 / SHA-256, the
-    // layouts real `.jsonl.xz` dumps ship), the hand-rolled
-    // [[graft.ops.Xz]] reader decodes (xz container walk, LZMA2 chunking,
-    // from-scratch LZMA range decoder). One wrong byte through the range
-    // coder breaks the per-class checksums.
+    // layouts real `.jsonl.xz` dumps ship), the [[graft.ops.Xz]] reader
+    // decodes (our xz container walk over xz-java's LZMA2 decoder). One
+    // wrong byte through the range coder breaks the per-class checksums.
     GraftQuery(
       "xz01_xz_jsonl",
       (s, d) => {
@@ -178,8 +177,8 @@ object CompressedShardQueries {
     // this container (no magic, 13-byte header, raw LZMA body). Shards
     // alternate the size-declared layout (what the tukaani reference
     // encoder writes) and the unknown-size end-marker layout (what
-    // liblzma/CPython always write) — both through the hand-rolled LZMA
-    // decoder's marker-aware path.
+    // liblzma/CPython always write) — both through xz-java's LZMA
+    // decoder, sized by the header or ended by the marker.
     GraftQuery(
       "xz03_alone_jsonl",
       (s, d) => {
@@ -427,7 +426,7 @@ object CompressedShardQueries {
     ),
 
     // ------------------------------------------------------------------
-    // bzip2 shard round trip through the hand-rolled codec (the container
+    // bzip2 shard round trip through commons-compress (the container
     // long-lived public dumps ship: Wikipedia `.xml.bz2`, pbzip2 output).
     // Shards rotate the block-size level, and every third shard is TWO
     // CONCATENATED streams (the pbzip2 / flush-point layout) — readers

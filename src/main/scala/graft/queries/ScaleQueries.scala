@@ -33,14 +33,13 @@ object ScaleQueries {
     * correct at the driver's sf0.01 gate; at ×100 (N = 200k) it gives
     * 14-bit keys — the configuration a real 100× build runs, measured
     * linear by `graft.tools.KnnScale` (BASELINE.md). The SRP signature is
-    * sized to 2·bits so the two bands never overlap.
+    * sized to nBands·bits so the bands never overlap.
     */
   def knnGraphBuild(s: SparkSession, d: String, k: Int = 3,
       nBands: Int = 2): org.apache.spark.sql.DataFrame = {
-    val n = Tables.embeddings(s, d).count()
-    val bits = math.max(8,
-      math.ceil(math.log(math.max(n, 2L).toDouble) / math.log(2.0)).toInt - 4)
-    require(nBands * bits <= 60, "signature budget exceeded")
+    require(nBands >= 1 && nBands * 8 <= 32,
+      s"$nBands bands of at least 8 bits exceed the 32-bit SRP signature")
+    val bits = knnBandBits(Tables.embeddings(s, d).count(), nBands)
     val mask = (1L << bits) - 1
     val weights = srpWeights(nBands * bits, 64)
     val e = Tables.embeddings(s, d)
@@ -68,6 +67,16 @@ object ScaleQueries {
     val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id").asc)
     cand.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
   }
+
+  /** Band-key width for `n` embeddings in `nBands` bands: the formula on
+    * [[knnGraphBuild]], capped at 32 / nBands because the SRP signature
+    * is an `int`. Past the cap a plane's `1 << b` term would wrap onto a
+    * lower band's bits; the cap first binds above 2^20 embeddings at two
+    * bands.
+    */
+  private[graft] def knnBandBits(n: Long, nBands: Int): Int =
+    math.min(32 / nBands, math.max(8,
+      math.ceil(math.log(math.max(n, 2L).toDouble) / math.log(2.0)).toInt - 4))
 
   /** Tmp dirs created by the layout queries, deleted on JVM exit — repeated
     * verify/bench runs don't accumulate stale layouts (the pid in each path

@@ -18,8 +18,8 @@ import graft.core.Refusal
 object CodecParity {
 
   /** Our decoder's verdict in a parity replay: the output, the refusal's
-    * message (the gates are told apart by it), or `raw:<class>` for any
-    * other exception — a decoder bug, never an agreement.
+    * message, or `raw:<class>` for any other exception — a decoder bug,
+    * never an agreement.
     */
   private[tools] def ours(body: => Array[Byte]): Either[String, Array[Byte]] =
     Try(body).toEither.left.map {
@@ -76,7 +76,6 @@ object CodecParity {
     var hashMismatch = 0L
     var raw = 0L
     var policyPlain = 0L // gzip: documented plain-.warc passthrough
-    var policyStrict = 0L // bzip2: strict Huffman-table validation
     val examples = scala.collection.mutable.ArrayBuffer[String]()
 
     val src = scala.io.Source.fromFile(s"$dir/$codec.tsv")
@@ -99,15 +98,6 @@ object CodecParity {
               raw += 1
               if (examples.size < 12) examples += s"RAW($msg) i=$i pos=$pos x=$x"
             }
-          case (Left(msg), true)
-              if codec == "bzip2" && msg.contains("over-subscribed Huffman") =>
-            // documented hardening divergence: bzip2 has no spec beyond its
-            // implementation; libbz2 builds decode tables WITHOUT Kraft
-            // validation and lets the block CRC arbitrate (the permissive
-            // path behind historical libbz2 CVEs). No correct canonical-
-            // code builder can emit an over-subscribed table, so refusing
-            // up-front only rejects streams no sane encoder produces.
-            policyStrict += 1
           case (Left(k), true) =>
             weRefuse += 1
             if (examples.size < 12) examples += s"REFUSE($k) i=$i pos=$pos x=$x"
@@ -127,8 +117,7 @@ object CodecParity {
       s""""agree_ok":$agreeOk,"agree_fail":$agreeFail,""" +
       s""""we_refuse_they_ok":$weRefuse,"we_ok_they_refuse":$weAccept,""" +
       s""""hash_mismatch":$hashMismatch,"raw_throws":$raw,""" +
-      s""""policy_plain_passthrough":$policyPlain,""" +
-      s""""policy_strict_tables":$policyStrict}""")
+      s""""policy_plain_passthrough":$policyPlain}""")
     examples.foreach(e => println(s"  disagree: $e"))
     if (weRefuse + weAccept + hashMismatch + raw > 0) sys.exit(1)
   }

@@ -19,9 +19,10 @@ import org.apache.spark.sql.functions._
   * should land ~linear-in-N (BASELINE.md records the round-10 numbers).
   *
   * Round 11: the registry query now computes the key width from the
-  * corpus size itself (`ScaleQueries.knnGraphBuild`, bits = max(8,
-  * ⌈log₂N⌉−4)) — pass `auto` as <bitsPerBand> to run the UNMODIFIED
-  * registry build at any scale and verify the self-scaling knob; numeric
+  * corpus size itself (`ScaleQueries.knnBandBits`, bits = max(8,
+  * ⌈log₂N⌉−4), capped at 32 / nBands) — pass `auto` as <bitsPerBand> to
+  * run the UNMODIFIED registry build at any scale and verify the
+  * self-scaling knob; numeric
   * widths remain for measuring off-design configurations (e.g. the
   * fixed-8-bit quadratic blow-up that motivated the change).
   *
@@ -40,10 +41,10 @@ object KnnScale {
     import graft.ops.{Similarity, Sketches}
     val n = graft.core.Tables.embeddings(spark, dir).count()
     val bits =
-      if (auto) math.max(8,
-        math.ceil(math.log(math.max(n, 2L).toDouble) / math.log(2.0)).toInt - 4)
+      if (auto) graft.queries.ScaleQueries.knnBandBits(n, nBands)
       else args(2).toInt
-    require(nBands * bits <= 60, "signature budget exceeded")
+    require(nBands >= 1 && bits >= 1 && nBands * bits <= 32,
+      s"$nBands bands of $bits bits exceed the 32-bit SRP signature")
     val totalBits = nBands * bits
     val mask = (1L << bits) - 1
 

@@ -1,11 +1,12 @@
 #!/usr/bin/env python3
-"""Differential mutant-parity oracles for the remaining hand-rolled
-decompressors that have stdlib reference implementations — the harness
-that caught the brotli ISLAST-metadata bug (round 15), generalized:
+"""Differential mutant-parity oracles for the decompressors that have
+stdlib reference implementations — the harness that caught the brotli
+ISLAST-metadata bug (round 15), generalized:
 
   gzip  — python zlib/gzip vs graft.ops.Warc.gunzipMembers
-  bzip2 — python bz2          vs graft.ops.Bzip2.decompress
-  xz    — python lzma         vs graft.ops.Xz.decompress
+  bzip2 — python bz2          vs graft.ops.Bzip2.decompress (commons-compress)
+  xz    — python lzma         vs graft.ops.Xz.decompress (our container
+          walk over xz-java's LZMA2 decoder)
 
 For every single-byte XOR mutant (x4 values) of a grid of reference-
 encoded streams (levels x content shapes, incl. multi-member/stream

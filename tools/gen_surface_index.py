@@ -28,7 +28,7 @@ FAMILY_DESC = {
     "clust": "clustering (k-means IVF trainer)",
     "mm": "multimodal (image/audio/video codecs + ISOBMFF, Matroska, Ogg, EXIF, ID3 metadata)",
     "assoc": "association rules",
-    "sz": "7z archives (LZMA1/LZMA2/copy/deflate/bzip2 folders, encoded headers)",
+    "sz": "7z archives (own header walk; xz-java/commons-compress/JDK folders, encoded headers)",
     "mail": "email corpora (RFC 5322 + MIME, RFC 2047, mboxrd mailboxes)",
     "curate": "curation rules (Gopher)",
     "pipe": "pipeline composition",
@@ -40,7 +40,7 @@ FAMILY_DESC = {
     "arrow": "Arrow IPC shards (validated buffers, poisoned-stream scan)",
     "avro": "Avro OCF record shards",
     "br": "brotli shards (RFC 7932 reader, uncompressed-meta-block writer)",
-    "bz": "bzip2 shards (hand-rolled BWT/MTF/Huffman, multi-stream)",
+    "bz": "bzip2 shards (commons-compress, multi-stream)",
     "cb": "CBOR record shards (RFC 8949)",
     "chat": "instruction/chat data (ChatML render, turn QC, ShareGPT)",
     "gg": "GGUF tensor shards (llama.cpp container)",
@@ -50,7 +50,7 @@ FAMILY_DESC = {
     "sn": "snappy-framed shards",
     "st": "safetensors shards (F32 + F16)",
     "tfr": "TFRecord shards (CRC-masked framing)",
-    "xz": "xz/LZMA2/LZMA shards (from-scratch range decoder)",
+    "xz": "xz/LZMA2/LZMA shards (own container walk over xz-java)",
     "zst": "zstd/LZ4/gzip shards (+ dictionary frames, seekable format)",
 }
 

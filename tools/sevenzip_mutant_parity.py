@@ -3,7 +3,8 @@
 against an independent from-the-spec python reference reader whose
 payload codecs are real liblzma (raw LZMA1/LZMA2), zlib (raw deflate)
 and bz2 — a different language AND different codec cores than the Scala
-side (graft.ops.SevenZip + the from-scratch graft LZMA decoders).
+side (graft.ops.SevenZip's header walk over xz-java's LZMA decoders and
+commons-compress bzip2).
 
 Directions in one run:
   1. graft-written bases (solid LZMA1 archives from SevenZip.write) must
